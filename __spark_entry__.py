@@ -1001,6 +1001,9 @@ def _q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpoint below materializes them before the workdir is
         # removed
         res_dir = f"{work}/res"
+        # created up front: zero micro-batches read back as an empty
+        # frame of the stream's schema, not a missing path
+        os.makedirs(res_dir)
 
         def sink(batch_df, _bid):
             batch_df.write.mode("append").parquet(res_dir)
@@ -1015,7 +1018,7 @@ def _q_streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not q.awaitTermination(600):
             q.stop()
             raise TimeoutError("streaming_ewma_1h did not drain within 600s")
-        res = spark.read.parquet(res_dir).localCheckpoint()
+        res = spark.read.schema(out.schema).parquet(res_dir).localCheckpoint()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     return res.select("key", "t", "v", _sci(F.col("psi")).alias("ewma"))
@@ -2646,6 +2649,9 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # JVM-side per-batch parquet appends + eager checkpoint instead
         # of collecting every batch's rows through the Python driver
         res_dir = f"{work}/res"
+        # created up front: zero micro-batches read back as an empty
+        # frame of the stream's schema, not a missing path
+        os.makedirs(res_dir)
 
         def sink(batch_df, _bid):
             batch_df.write.mode("append").parquet(res_dir)
@@ -2660,7 +2666,7 @@ def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         if not q.awaitTermination(600):
             q.stop()
             raise TimeoutError("streaming_dedup did not drain within 600s")
-        res = spark.read.parquet(res_dir).localCheckpoint()
+        res = spark.read.schema(deduped.schema).parquet(res_dir).localCheckpoint()
     finally:
         shutil.rmtree(work, ignore_errors=True)
     day = (F.col("t") - F.pmod(F.col("t"), F.lit(86400))).alias("day")

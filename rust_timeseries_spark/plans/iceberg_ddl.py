@@ -125,8 +125,8 @@ class IcebergTierPlan:
         """The bucket-aligned recompute commit: recompute the dirty day
         partitions from raw into ``tmp_view`` (same ``cascade`` plan the
         parquet path runs), then atomically replace exactly those
-        partitions. ``spark.sql.sources.partitionOverwriteMode=dynamic``
-        is already set by TierStore; Iceberg's INSERT OVERWRITE is
+        partitions. The parquet path sets ``partitionOverwriteMode=dynamic``
+        on its merge writers only; Iceberg's INSERT OVERWRITE is
         dynamic for v2 tables."""
         if not TIER_PARTITIONS[tier]:
             raise ValueError(f"tier {tier} is not day-partitioned")

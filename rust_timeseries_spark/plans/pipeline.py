@@ -40,6 +40,13 @@ class RollupPipeline:
         self.ewma_alpha = ewma_alpha
 
     def run_increment(self, full_raw: DataFrame, batch: DataFrame, run_id: str) -> dict[str, float]:
+        """Merge ``batch`` into the tiers, then record lineage, advance the
+        watermarks and record metrics. The batch row count and the
+        per-day lineage counts are observed on the merge's own jobs
+        (the batch scan and the 1h partition write), the watermark
+        extent on the previous watermark write, and every store table is
+        read through its recorded schema, so the bookkeeping adds no
+        counting or schema-inference jobs."""
         from pyspark.sql import Observation
 
         t0 = time.perf_counter()
@@ -51,19 +58,10 @@ class RollupPipeline:
         batch = batch.observe(obs, F.count(F.lit(1)).alias("n_rows"))
         days = self.store.merge_increment(full_raw, batch)
         n_batch = int(obs.get["n_rows"])
-        t1h = self.store.read_tier("1h")
-        day_rows = [
-            (d, n)
-            for d, n in (
-                t1h.withColumn("d", F.col("bucket_ts") - F.pmod(F.col("bucket_ts"), F.lit(86400)))
-                .where(F.col("d").isin(days))
-                .groupBy("d")
-                .count()
-                .collect()
-            )
-        ]
-        self.meta.record_lineage(run_id, "1h", day_rows)
-        self._advance_ewma_watermarks(t1h, dirty_days=days)
+        # lineage row counts were observed on the 1h partition write
+        # itself — no re-read or recount of the stored tier
+        self.meta.record_lineage(run_id, "1h", self.store.day_rows)
+        self._advance_ewma_watermarks(self.store.read_tier("1h"), dirty_days=days)
         wall = time.perf_counter() - t0
         metrics = {
             "n_batch_rows": float(n_batch),
@@ -100,13 +98,10 @@ class RollupPipeline:
         or before any watermark invalidates the downstream ψ path, so
         that case (and the bootstrap) falls back to the full recursion."""
         wm = self.meta.watermarks(self.keys)
-        have_wm = wm.limit(1).count() > 0
-        incremental = have_wm and dirty_days is not None and len(dirty_days) > 0
-        if incremental:
-            max_wm_day = wm.agg(
-                F.max(F.col("last_bucket_ts") - F.pmod(F.col("last_bucket_ts"), F.lit(86400)))
-            ).collect()[0][0]
-            incremental = min(dirty_days) > max_wm_day
+        incremental = False
+        if dirty_days:
+            n_wm, max_wm_day = self.meta.watermark_extent(self.keys)
+            incremental = n_wm > 0 and min(dirty_days) > max_wm_day
         if not incremental:
             source = self.ewma_full(t1h)
         else:
@@ -126,9 +121,9 @@ class RollupPipeline:
         )
         if incremental:
             # keys with no fresh buckets keep their previous state — the
-            # overwrite must not drop them. (save_watermarks stages
-            # through watermark_new before replacing the table, so this
-            # plan's read of the old table materializes safely first.)
+            # overwrite must not drop them. (save_watermarks writes the
+            # new table beside the old one before swapping it in, so
+            # this plan's read of the old table completes first.)
             untouched = wm.join(rows.select(*self.keys), self.keys, "left_anti")
             rows = untouched.select(*rows.columns).unionByName(rows)
         self.meta.save_watermarks(rows)

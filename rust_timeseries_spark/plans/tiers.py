@@ -18,6 +18,18 @@ analogue is ``Init::FixedVector``, src/duration/core/init.rs:140-144).
 Late data is handled the same way: a late row simply makes its day
 partition dirty again.
 
+The dynamic overwrite is an option of the two merge writers, never a
+session setting: the caller's other overwrites keep their own mode, and
+``materialize_full`` overwrites statically, so a full rebuild drops day
+partitions its input no longer covers.
+
+Each tier's schema is recorded when the store writes it and reads go
+through it (``spark.read.schema(...)``), which skips the one-task
+footer-inference job an unschema'd ``spark.read.parquet(dir)`` runs; a
+tier this instance has not written (a store reopened on an existing
+directory) is inferred on its first read only. Whole-table rewrites
+(the 1d rebuild, ``compact``) are swapped in with ``checkpoint.swap_dir``.
+
 Retention: per-tier TTL deletes whole partitions (the cheap path — no
 row rewrites); compaction coalesces small files inside a partition.
 """
@@ -27,10 +39,12 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import rollup
+from .checkpoint import read_recorded, swap_dir
 
 _PARTITION_COLS = {"1m": ["bucket_day"], "1h": ["bucket_day"], "1d": []}
 
@@ -54,7 +68,11 @@ class TierStore:
         self.ts_col = ts_col
         self.value_col = value_col
         self.epoch = epoch
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        #: schema of each tier, recorded when written or first read
+        self._schemas: dict[str, T.StructType] = {}
+        #: ``(bucket_day, n_rows)`` of the 1h partitions the last
+        #: ``merge_increment`` replaced, observed on its write
+        self.day_rows: list[tuple[int, int]] = []
 
     # -- paths ---------------------------------------------------------------
 
@@ -68,6 +86,25 @@ class TierStore:
             day = F.date_trunc("day", F.col("bucket_ts"))
         return tier_df.withColumn("bucket_day", day)
 
+    @staticmethod
+    def _epoch_day(df: DataFrame, col: str) -> Column:
+        es = rollup.epoch_seconds(F.col(col), dict(df.dtypes)[col])
+        return es - F.pmod(es, F.lit(86400))
+
+    def _write(self, df: DataFrame, tier: str, dynamic: bool = False, path: str | None = None) -> None:
+        """Overwrite ``tier`` (or ``path``, a copy to swap in) with ``df``
+        and record its schema. ``dynamic`` replaces only the day
+        partitions ``df`` has rows for."""
+        writer = df.write.mode("overwrite")
+        if _PARTITION_COLS[tier]:
+            writer = writer.option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+            writer = writer.partitionBy(*_PARTITION_COLS[tier])
+        writer.parquet(path or self.tier_path(tier))
+        self._schemas[tier] = df.schema
+
+    def _read(self, tier: str) -> DataFrame:
+        return read_recorded(self.spark, self.tier_path(tier), self._schemas, tier)
+
     # -- build ---------------------------------------------------------------
 
     def cascade(self, raw_df: DataFrame) -> dict[str, DataFrame]:
@@ -77,7 +114,10 @@ class TierStore:
         return {"1m": t1m, "1h": t1h, "1d": t1d}
 
     def materialize_full(self, raw_df: DataFrame) -> None:
-        """Initial (or full-rebuild) materialization of all tiers."""
+        """Initial (or full-rebuild) materialization of all tiers. Every
+        tier is overwritten whole (static overwrite, whatever the
+        session's ``partitionOverwriteMode``), so day partitions
+        ``raw_df`` no longer covers are dropped."""
         tiers = self.cascade(raw_df)
         for tier, df in tiers.items():
             out = self._with_day(df) if _PARTITION_COLS[tier] else df
@@ -88,56 +128,53 @@ class TierStore:
                 # it holds rows for — ~32 tasks × |days| tiny files per
                 # tier, paid again on every read's listing (guide §6)
                 out = out.repartition(*_PARTITION_COLS[tier])
-            writer = out.write.mode("overwrite")
-            if _PARTITION_COLS[tier]:
-                writer = writer.partitionBy(*_PARTITION_COLS[tier])
-            writer.parquet(self.tier_path(tier))
+            self._write(out, tier)
 
     def read_tier(self, tier: str) -> DataFrame:
-        df = self.spark.read.parquet(self.tier_path(tier))
+        df = self._read(tier)
         return df.drop("bucket_day") if "bucket_day" in df.columns else df
 
     # -- incremental maintenance --------------------------------------------
 
     def affected_days(self, batch_df: DataFrame) -> list[int]:
-        dtype = dict(batch_df.dtypes)[self.ts_col]
-        es = rollup.epoch_seconds(F.col(self.ts_col), dtype)
-        day = es - F.pmod(es, F.lit(86400))
+        day = self._epoch_day(batch_df, self.ts_col)
         return sorted(r[0] for r in batch_df.select(day.alias("d")).distinct().collect())
 
     def merge_increment(self, full_raw_df: DataFrame, batch_df: DataFrame) -> list[int]:
         """Recompute the day partitions touched by ``batch_df`` from the
         raw source of truth and atomically replace them (idempotent
         MERGE-equivalent keyed on (keys, bucket_ts)). Returns the days
-        replaced.
+        replaced; ``self.day_rows`` holds each replaced 1h partition's
+        row count, observed on the write itself (a dirty day's partition
+        is replaced by exactly the rows written for it).
 
         At scale ``full_raw_df`` is the Iceberg token table: partition
         pruning reduces the recompute scan to exactly the dirty days.
         """
+        self.day_rows = []
         days = self.affected_days(batch_df)
         if not days:
             return days
-        dtype = dict(full_raw_df.dtypes)[self.ts_col]
-        es = rollup.epoch_seconds(F.col(self.ts_col), dtype)
-        day = es - F.pmod(es, F.lit(86400))
-        dirty_raw = full_raw_df.where(day.isin(days))
+        dirty_raw = full_raw_df.where(self._epoch_day(full_raw_df, self.ts_col).isin(days))
         tiers = self.cascade(dirty_raw)
+        obs = Observation()
         for tier in ("1m", "1h"):
             out = self._with_day(tiers[tier])
+            if tier == "1h":
+                day = self._epoch_day(out, "bucket_ts")
+                out = out.observe(obs, *[F.sum((day == d).cast("long")).alias(str(d)) for d in days])
             # dynamic partition overwrite: only the dirty bucket_day dirs.
             # Clustered by day first — same one-file-per-day write shape
             # as materialize_full (guide §6)
-            out = out.repartition("bucket_day")
-            out.write.mode("overwrite").partitionBy("bucket_day").parquet(self.tier_path(tier))
+            self._write(out.repartition("bucket_day"), tier, dynamic=True)
+        counts = obs.get
+        self.day_rows = [(d, int(counts[str(d)])) for d in days if counts[str(d)]]
         # 1d tier is unpartitioned-by-day: rebuild it from the 1h tier
         # (cheap — |sources| × |days| rows)
         t1d = rollup.fold_up(self.read_tier("1h"), "1d", self.keys, epoch=self.epoch)
-        t1d.write.mode("overwrite").parquet(self.tier_path("1d") + "_tmp")
         tmp = self.tier_path("1d") + "_tmp"
-        final = self.tier_path("1d")
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        self._write(t1d, "1d", path=tmp)
+        swap_dir(tmp, self.tier_path("1d"))
         return days
 
     # -- retention & compaction ----------------------------------------------
@@ -198,19 +235,14 @@ class TierStore:
         that many writing tasks (review r4 — a plain
         ``repartition(N, "bucket_day")`` hashes a whole day to ONE task,
         so the parameter silently did nothing)."""
-        df = self.spark.read.parquet(self.tier_path(tier))
+        df = self._read(tier)
         tmp = self.tier_path(tier) + "_compact"
         n = max(1, int(target_files_per_partition))
-        if _PARTITION_COLS[tier] and "bucket_day" in df.columns:
+        if _PARTITION_COLS[tier]:
             salt_src = [c for c in df.columns if c != "bucket_day"]
-            out = df.withColumn("_salt", F.pmod(F.xxhash64(*salt_src), F.lit(n)))
-            writer = (
-                out.repartition("bucket_day", "_salt").drop("_salt")
-                .write.mode("overwrite").partitionBy("bucket_day")
-            )
+            salted = df.withColumn("_salt", F.pmod(F.xxhash64(*salt_src), F.lit(n)))
+            out = salted.repartition("bucket_day", "_salt").drop("_salt")
         else:
-            writer = df.coalesce(n).write.mode("overwrite")
-        writer.parquet(tmp)
-        final = self.tier_path(tier)
-        shutil.rmtree(final)
-        os.rename(tmp, final)
+            out = df.coalesce(n)
+        self._write(out, tier, path=tmp)
+        swap_dir(tmp, self.tier_path(tier))

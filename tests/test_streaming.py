@@ -1,5 +1,6 @@
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from rust_timeseries_spark import datagen
@@ -301,3 +302,34 @@ def test_stream_session_rollup_matches_batch(spark, tmp_path):
     assert got == want
     # the boundary behavior itself: k1 has exactly 2 sessions
     assert sum(1 for r in want if r[0] == "k1") == 2
+
+
+@pytest.mark.parametrize(
+    "query, module, fn",
+    [
+        ("streaming_ewma_1h", "ewma_stream", "ewma_stateful"),
+        ("streaming_dedup", "dedup_stream", "dedup_stream"),
+    ],
+)
+def test_streaming_collector_zero_micro_batches(spark, sf_dir, tmp_path, monkeypatch, query, module, fn):
+    # the query's stream is swapped for one over an EMPTY input dir, so
+    # the foreachBatch collector sees zero micro-batches: the result is
+    # an empty frame of the query's usual schema, not a missing-path error
+    import importlib
+
+    import __spark_entry__ as entry
+
+    mod = importlib.import_module(f"rust_timeseries_spark.streaming.{module}")
+    real = getattr(mod, fn)
+    empty_dir = tmp_path / "empty_in"
+    empty_dir.mkdir()
+
+    def on_empty_input(stream_df, *args, **kwargs):
+        empty = spark.readStream.schema(stream_df.schema).parquet(str(empty_dir))
+        return real(empty, *args, **kwargs)
+
+    expected = entry.queries()[query](spark, sf_dir).schema
+    monkeypatch.setattr(mod, fn, on_empty_input)
+    got = entry.queries()[query](spark, sf_dir)
+    assert got.count() == 0
+    assert got.schema == expected

@@ -281,3 +281,272 @@ def test_write_clustered_layout(spark, tmp_path):
         ranges.sort()
         for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
             assert a_hi <= b_lo, (a_hi, b_lo)
+
+
+def _epoch_day(df, col="ts"):
+    from rust_timeseries_spark.operators.rollup import epoch_seconds
+
+    es = epoch_seconds(F.col(col), dict(df.dtypes)[col])
+    return es - F.pmod(es, F.lit(86400))
+
+
+def _jobs_in(spark, group, fn):
+    """Number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_materialize_full_rebuilds_and_leaves_session_conf(spark, raw, tmp_path):
+    # a full rebuild must drop day partitions its input no longer covers,
+    # and constructing a store must not switch the caller's session to
+    # dynamic partition overwrite
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        store = TierStore(spark, str(tmp_path / "tiers"))
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)
+    day = _epoch_day(raw)
+    days = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())
+    store.materialize_full(raw)
+    recent = raw.where(day >= days[3])
+    store.materialize_full(recent)
+    expected = recent.agg(F.sum("n_tok")).first()[0]
+    for tier in ("1m", "1h", "1d"):
+        assert store.read_tier(tier).agg(F.sum("tok_sum")).first()[0] == expected, tier
+        assert _tier_dict(store.read_tier(tier)) == _tier_dict(store.cascade(recent)[tier]), tier
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash_at(monkeypatch, n):
+    """Make the ``n``-th rename/rmtree call of plans.checkpoint raise
+    (once), as if the process died right before it."""
+    import os
+    import shutil
+    import types
+
+    from rust_timeseries_spark.plans import checkpoint
+
+    calls = []
+
+    def step(fn):
+        def run(*a, **kw):
+            calls.append(a)
+            if len(calls) == n:
+                raise _Crash(a)
+            return fn(*a, **kw)
+        return run
+
+    monkeypatch.setattr(checkpoint, "os", types.SimpleNamespace(path=os.path, rename=step(os.rename)))
+    monkeypatch.setattr(checkpoint, "shutil", types.SimpleNamespace(rmtree=step(shutil.rmtree)))
+
+
+# swap_dir of an existing table makes four calls: clear a stale aside
+# copy, move the table aside, move the new copy in, delete the aside
+# copy. Crashing at call n leaves the table as it was (n <= 3) or already
+# replaced (n = 4)
+_SWAP_CRASHES = [(2, "old"), (3, "old"), (4, "new")]
+
+
+@pytest.mark.parametrize("crash_at, expect", _SWAP_CRASHES)
+def test_watermark_swap_survives_crash(spark, tmp_path, monkeypatch, crash_at, expect):
+    import os
+
+    from rust_timeseries_spark.plans.checkpoint import MetaStore
+
+    def wm(v):
+        return spark.createDataFrame(
+            [("a", "1h", 86400 * v, [float(v)], [float(v)])],
+            "source string, tier string, last_bucket_ts long, psi_lags array<double>, dur_lags array<double>",
+        )
+
+    def psi(meta):
+        return [r["psi_lags"][0] for r in meta.watermarks(["source"]).collect()]
+
+    base = str(tmp_path / "p")
+    meta = MetaStore(spark, base)
+    meta.save_watermarks(wm(1))
+    _crash_at(monkeypatch, crash_at)
+    with pytest.raises(_Crash):
+        meta.save_watermarks(wm(2))
+    want = 1 if expect == "old" else 2
+    # a store reopened after the crash reads a whole table, never an
+    # empty one (that would silently reseed every recursion); the
+    # extent the watermark decision uses is queried, not remembered
+    for m in (MetaStore(spark, base), meta):
+        assert psi(m) == [float(want)]
+        assert m.watermark_extent(["source"]) == (1, 86400 * want)
+    meta.save_watermarks(wm(3))
+    assert psi(meta) == [3.0]
+    assert meta.watermark_extent(["source"]) == (1, 86400 * 3)
+    assert sorted(os.listdir(meta.base)) == ["watermark"]
+
+
+@pytest.mark.parametrize("crash_at, expect", _SWAP_CRASHES)
+def test_tier_1d_swap_survives_crash(spark, raw, tmp_path, monkeypatch, crash_at, expect):
+    day = _epoch_day(raw)
+    days = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())
+    early = raw.where(day < days[-2])
+    store = TierStore(spark, str(tmp_path / "tiers"))
+    store.materialize_full(early)
+    _crash_at(monkeypatch, crash_at)
+    with pytest.raises(_Crash):
+        store.merge_increment(raw, raw.where(day >= days[-2]))
+    want = early if expect == "old" else raw
+    assert _tier_dict(store.read_tier("1d")) == _tier_dict(store.cascade(want)["1d"])
+    # the retried increment converges
+    store.merge_increment(raw, raw.where(day >= days[-2]))
+    for tier in ("1m", "1h", "1d"):
+        assert _tier_dict(store.read_tier(tier)) == _tier_dict(store.cascade(raw)[tier])
+
+
+def _arrivals(raw):
+    """Per-row batch index: rows of the last three days arrive in
+    batches 0-2 on their own day; a quarter of all rows arrive one day
+    late and another quarter two days late, so every batch dirties up to
+    three days. Negative = already in the base materialization; rows
+    due after batch 2 never arrive."""
+    day = _epoch_day(raw)
+    days = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())
+    assert days == list(range(days[0], days[-1] + 1, 86400)) and len(days) >= 6
+    lag = F.when(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 0, 1).when(
+        F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 1, 2
+    ).otherwise(0)
+    first = days[-3]
+    return raw.withColumn("arrival", ((day - F.lit(first)) / 86400).cast("int") + lag).where(
+        F.col("arrival") <= 2
+    )
+
+
+def _check_lineage(pipe, run_id, days):
+    lin = {
+        r["bucket_day"]: r["n_rows"]
+        for r in pipe.meta.lineage().where(F.col("run_id") == run_id).collect()
+    }
+    t1h = pipe.store.read_tier("1h")
+    recount = {
+        r["d"]: r["count"]
+        for r in t1h.select(_epoch_day(t1h, "bucket_ts").alias("d")).where(F.col("d").isin(days))
+        .groupBy("d").count().collect()
+    }
+    assert set(lin) == set(days)
+    assert lin == recount
+
+
+def _watermarks(pipe):
+    return sorted(tuple(r) for r in pipe.meta.watermarks(["source"]).collect())
+
+
+def test_lean_increment_lineage_resume_and_job_budget(spark, raw, tmp_path):
+    # lineage rows counted on the 1h write equal a recount of the stored
+    # tier over three increments with late rows on several days and one
+    # replayed batch; a pipeline reopened on the same store mid-way ends
+    # with the same tiers and watermarks as one that ran throughout; and
+    # one warm increment stays within its job budget (16 measured; 27
+    # with the lineage re-read and recount, schema-inference reads, the
+    # watermark decision queries and the watermark re-read and rewrite)
+    arr = _arrivals(raw).cache()
+    upto = [arr.where(F.col("arrival") <= i).drop("arrival") for i in range(3)]
+    batch = [arr.where(F.col("arrival") == i).drop("arrival") for i in range(3)]
+    base = arr.where(F.col("arrival") < 0).drop("arrival")
+    # (batch, last batch ingested, run id); the last step replays batch 1
+    schedule = [(0, 0, "r0"), (1, 1, "r1"), (2, 2, "r2"), (1, 2, "r1-replay")]
+
+    pipes = {}
+    for name in ("continuous", "reopened"):
+        path = str(tmp_path / name)
+        pipe = RollupPipeline(spark, path)
+        pipe.store.materialize_full(base)
+        pipe._advance_ewma_watermarks(pipe.store.read_tier("1h"))
+        for i, (b, through, run_id) in enumerate(schedule):
+            if name == "reopened" and i == 2:
+                pipe = RollupPipeline(spark, path)
+
+            def increment():
+                pipe.run_increment(upto[through], batch[b], run_id)
+
+            if name == "continuous" and i == 2:
+                n_jobs = _jobs_in(spark, "lean-increment", increment)
+                assert n_jobs <= 18, n_jobs
+            else:
+                increment()
+            _check_lineage(pipe, run_id, pipe.store.affected_days(batch[b]))
+        for tier in ("1m", "1h", "1d"):
+            assert _tier_dict(pipe.store.read_tier(tier)) == _tier_dict(pipe.store.cascade(upto[2])[tier])
+        pipes[name] = pipe
+    # the read set plans through the recorded schemas: no job at all
+    store = pipes["continuous"].store
+    assert _jobs_in(spark, "lean-read", lambda: [store.read_tier(t) for t in ("1h", "1d")]) == 0
+    for tier in ("1m", "1h", "1d"):
+        assert _tier_dict(pipes["reopened"].store.read_tier(tier)) == _tier_dict(store.read_tier(tier))
+    assert _watermarks(pipes["reopened"]) == _watermarks(pipes["continuous"])
+    arr.unpersist()
+
+
+def test_int_key_roundtrips_through_watermarks(spark, raw, tmp_path):
+    # the watermark table keeps the key type it was written with (not
+    # watermark_schema()'s string keys), so an int key resumes the same
+    # recursion as the string key it encodes
+    codes = {r["source"]: i for i, r in enumerate(raw.select("source").distinct().orderBy("source").collect())}
+    code = F.create_map(*[x for k, v in codes.items() for x in (F.lit(k), F.lit(v))])
+    day = _epoch_day(raw)
+    days = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())
+    got = {}
+    for key, df in (("source", raw), ("src_id", raw.withColumn("src_id", code[F.col("source")]))):
+        pipe = RollupPipeline(spark, str(tmp_path / key), keys=[key])
+        pipe.store.materialize_full(df.where(day < days[-2]))
+        pipe._advance_ewma_watermarks(pipe.store.read_tier("1h"))
+        pipe.run_increment(df, df.where(day >= days[-2]), "r1")
+        wm = pipe.meta.watermarks([key])
+        got[key] = sorted(tuple(r) for r in wm.collect())
+        if key == "src_id":
+            assert dict(wm.dtypes)["src_id"] == "int"
+            assert dict(RollupPipeline(spark, str(tmp_path / key), keys=[key]).meta.watermarks([key]).dtypes)["src_id"] == "int"
+    assert got["src_id"] == sorted((codes[r[0]], *r[1:]) for r in got["source"])
+
+
+def test_meta_appends_with_arrow_disabled(spark, tmp_path):
+    from rust_timeseries_spark.plans.checkpoint import MetaStore
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        meta = MetaStore(spark, str(tmp_path / "p"))
+        meta.record_lineage("r1", "1h", [(86400, 5), (172800, 7)])
+        meta.record_lineage("r2", "1h", [])
+        meta.record_metrics("r1", {"n_batch_rows": 12, "wall_seconds": 0.5})
+        lin = sorted(tuple(r) for r in MetaStore(spark, str(tmp_path / "p")).lineage().collect())
+        met = sorted(tuple(r) for r in meta.metrics().collect())
+    finally:
+        spark.conf.set(key, before)
+    assert lin == [("r1", "1h", 86400, 5), ("r1", "1h", 172800, 7)]
+    assert met == [("r1", "n_batch_rows", 12.0), ("r1", "wall_seconds", 0.5)]
+    assert meta.lineage().schema == MetaStore(spark, str(tmp_path / "p")).lineage().schema
+
+
+def test_timestamp_store_reads_through_recorded_schema(spark, raw, tmp_path):
+    # an epoch=False store partitions by a TIMESTAMP bucket_day; the
+    # recorded schema keeps that type on read, so merge (whose 1d rebuild
+    # reads the 1h tier), compaction and retention all still work
+    store = TierStore(spark, str(tmp_path / "ts"), epoch=False)
+    day = _epoch_day(raw)
+    days = sorted(r[0] for r in raw.select(day.alias("d")).distinct().collect())
+    store.materialize_full(raw.where(day < days[-2]))
+    assert store.merge_increment(raw, raw.where(day >= days[-2])) == days[-2:]
+    assert [d for d, _ in store.day_rows] == days[-2:]
+    store.compact("1h")
+    assert dict(store._read("1h").dtypes)["bucket_day"].startswith("timestamp")
+    for tier in ("1m", "1h", "1d"):
+        assert _tier_dict(store.read_tier(tier)) == _tier_dict(store.cascade(raw)[tier])
+    assert store.expire("1h", days[2]) == 2
