@@ -267,10 +267,10 @@ def _bloom_word_cols(set_col: str, bits: int = BLOOM_BITS) -> list:
     CodegenFallback). One hash per element: element e sets bit
     ``pmod(xxhash64(e), bits)``.
 
-    Guarantee used by the pair prune: every element common to two sets
-    sets the SAME bit in both bitmaps, so
-    ``Σ_w bit_count(a_w & b_w) ≥ |A ∩ B|`` — an upper bound with no
-    false negatives (hash collisions only inflate it)."""
+    Guarantee used by the pair prune: an element common to two sets
+    sets the SAME bit in both bitmaps, so every bit set in ``a`` but
+    not in ``b`` was set by a different element of A \\ B (see
+    ``_bloom_overlap_ubound``)."""
     n_words = bits // 64
     bidx = f"transform({set_col}, t -> CAST(pmod(xxhash64(t), {bits}) AS INT))"
     return [
@@ -282,18 +282,40 @@ def _bloom_word_cols(set_col: str, bits: int = BLOOM_BITS) -> list:
     ]
 
 
+def _bloom_slack(set_col: str, bits: int = BLOOM_BITS):
+    """The set's Bloom slack ``|S| − popcount(bitmap)``: the elements
+    whose bit another element of the same set already set. Counted from
+    the distinct bit indices, not from the ``_bw{i}`` words, so the
+    per-document projection does not repeat the word folds."""
+    bidx = f"transform({set_col}, t -> pmod(xxhash64(t), {bits}))"
+    return F.size(set_col) - F.size(F.array_distinct(F.expr(bidx)))
+
+
+def _bloom_side(docs: DataFrame, id_col: str, side: str) -> DataFrame:
+    """One side of the pair prune: id, ``_sz``, ``_sl`` and the Bloom
+    words of the set table, suffixed ``_{side}``."""
+    return docs.select(
+        F.col(id_col).alias(f"id_{side}"),
+        *[F.col(c).alias(f"{c}_{side}")
+          for c in ["_sz", "_sl", *[f"_bw{w}" for w in range(BLOOM_BITS // 64)]]],
+    )
+
+
 def _bloom_overlap_ubound(bits: int = BLOOM_BITS):
-    """Σ_w popcount(a_w & b_w) over the paired bloom columns ``_bw{i}_a``
-    / ``_bw{i}_b`` — the codegen'd overlap upper bound."""
+    """Upper bound on |A ∩ B| over the joined ``_bloom_side`` columns,
+    all codegen'd: ``Σ_w popcount(a_w & b_w) + min(_sl_a, _sl_b)``
+    (``_sl`` is ``_bloom_slack``).
+
+    A bit set in ``a`` but not in ``b`` comes from an element of A \\ B,
+    and distinct bits come from distinct elements, so
+    |A ∩ B| ≤ |A| − popcount(a & ~b) = popcount(a & b) + |A| − popcount(a),
+    and the same for B.  (``Σ popcount(a & b)`` alone is NOT a bound:
+    common elements that share one bit are counted once.)"""
     n_words = bits // 64
-    terms = [
-        F.bit_count(F.col(f"_bw{w}_a").bitwiseAND(F.col(f"_bw{w}_b")))
-        for w in range(n_words)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    out = F.bit_count(F.col("_bw0_a").bitwiseAND(F.col("_bw0_b")))
+    for w in range(1, n_words):
+        out = out + F.bit_count(F.col(f"_bw{w}_a").bitwiseAND(F.col(f"_bw{w}_b")))
+    return out + F.least("_sl_a", "_sl_b")
 
 
 def ngram_jaccard_threshold_pairs(
@@ -347,6 +369,7 @@ def ngram_jaccard_threshold_pairs(
         .select(
             id_col, *gcols, "_set",
             F.size("_set").alias("_sz"),
+            _bloom_slack("_set").alias("_sl"),
             *_bloom_word_cols("_set"),
         )
         .localCheckpoint()
@@ -394,30 +417,23 @@ def ngram_jaccard_threshold_pairs(
     # LOSSLESS Bloom prune before the pair-distinct and the exact
     # verification (guide §3.2 applied to verification): attach each
     # side's 128-byte bloom summary + set size, keep a collision only
-    # if the popcount upper bound can still reach the overlap a
-    # qualifying pair NEEDS — J ≥ t ⟺ |A∩B| ≥ t/(1+t)·(|A|+|B|)
-    # (ceiling biased DOWN like ``alpha`` above: the bound can only
-    # get weaker, never drops a qualifying pair). Bloom collisions
-    # only inflate the upper bound, so false negatives are impossible;
-    # the surviving pairs (a tiny fraction — random pairs share far
-    # fewer bits than the required overlap) still go through the exact
-    # sorted-set intersection that produces the output values.
-    n_words = BLOOM_BITS // 64
-    meta_a = docs.select(
-        F.col(id_col).alias("id_a"), F.col("_sz").alias("_sz_a"),
-        *[F.col(f"_bw{w}").alias(f"_bw{w}_a") for w in range(n_words)],
-    )
-    meta_b = docs.select(
-        F.col(id_col).alias("id_b"), F.col("_sz").alias("_sz_b"),
-        *[F.col(f"_bw{w}").alias(f"_bw{w}_b") for w in range(n_words)],
-    )
+    # if the overlap upper bound (``_bloom_overlap_ubound``) can still
+    # reach the overlap a qualifying pair NEEDS —
+    # J ≥ t ⟺ |A∩B| ≥ t/(1+t)·(|A|+|B|) (ceiling biased DOWN like
+    # ``alpha`` above: the bound can only get weaker, never drops a
+    # qualifying pair). Bloom collisions only shrink the bits one side
+    # has alone, i.e. only loosen the bound, so false negatives are
+    # impossible; the surviving pairs (a tiny fraction — random pairs
+    # have far more bits of their own than a qualifying pair can) still
+    # go through the exact sorted-set intersection that produces the
+    # output values.
     required = F.ceil(
         F.lit(threshold / (1.0 + threshold)) * (F.col("_sz_a") + F.col("_sz_b"))
         - F.lit(1e-9)
     )
     cands = (
-        colls.join(meta_a, "id_a")
-        .join(meta_b, "id_b")
+        colls.join(_bloom_side(docs, id_col, "a"), "id_a")
+        .join(_bloom_side(docs, id_col, "b"), "id_b")
         .where(_bloom_overlap_ubound() >= required)
         .select("id_a", "id_b")
         .distinct()
@@ -490,6 +506,7 @@ def incremental_jaccard_pairs(
         .select(
             id_col, "_is_delta", "_set",
             F.size("_set").alias("_sz"),
+            _bloom_slack("_set").alias("_sl"),
             *_bloom_word_cols("_set"),
         )
         .localCheckpoint()
@@ -526,25 +543,16 @@ def incremental_jaccard_pairs(
         F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
         F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
     )
-    # same lossless bloom-popcount prune as ngram_jaccard_threshold_
-    # pairs: drop collisions whose overlap upper bound cannot reach the
+    # same lossless bloom prune as ngram_jaccard_threshold_pairs:
+    # drop collisions whose overlap upper bound cannot reach the
     # required t/(1+t)·(|A|+|B|) before the distinct + exact verify
-    n_words = BLOOM_BITS // 64
-    meta_a = docs.select(
-        F.col(id_col).alias("id_a"), F.col("_sz").alias("_sz_a"),
-        *[F.col(f"_bw{w}").alias(f"_bw{w}_a") for w in range(n_words)],
-    )
-    meta_b = docs.select(
-        F.col(id_col).alias("id_b"), F.col("_sz").alias("_sz_b"),
-        *[F.col(f"_bw{w}").alias(f"_bw{w}_b") for w in range(n_words)],
-    )
     required = F.ceil(
         F.lit(threshold / (1.0 + threshold)) * (F.col("_sz_a") + F.col("_sz_b"))
         - F.lit(1e-9)
     )
     cands = (
-        colls.join(meta_a, "id_a")
-        .join(meta_b, "id_b")
+        colls.join(_bloom_side(docs, id_col, "a"), "id_a")
+        .join(_bloom_side(docs, id_col, "b"), "id_b")
         .where(_bloom_overlap_ubound() >= required)
         .select("id_a", "id_b")
         .distinct()

@@ -23,3 +23,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``jobs_in(group, fn)``: number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+
+    def count(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

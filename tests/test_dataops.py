@@ -185,6 +185,25 @@ def test_ngram_jaccard_prefix_filter_is_exact(spark):
     assert dedup.ngram_jaccard_threshold_pairs(docs.limit(200), threshold=1.0).count() == 0
 
 
+def test_bloom_prune_keeps_identical_large_docs(spark):
+    """Σ popcount(a & b) is not an upper bound on |A ∩ B|: two identical
+    docs of 1,200 distinct words have 1,198 common shingles but set only
+    ~700 of the 1,024 Bloom bits, under the 799 that J ≥ 0.5 needs. Both
+    pruned operators must keep them, as the unpruned ngram_jaccard_pairs
+    does."""
+    text = " ".join(f"w{i}" for i in range(1200))
+    docs = spark.createDataFrame(
+        [(1, text), (2, text), (3, "a b c d e")], "doc_id long, text string"
+    )
+    want = [(1, 2, 1198, 1.0)]
+    cols = ["id_a", "id_b", "inter", "jaccard"]
+    assert [tuple(r) for r in dedup.ngram_jaccard_threshold_pairs(docs, threshold=0.5)
+            .select(cols).collect()] == want
+    assert [tuple(r) for r in dedup.incremental_jaccard_pairs(
+        docs.where("doc_id != 2"), docs.where("doc_id = 2"), threshold=0.5
+    ).select(cols).collect()] == want
+
+
 def test_prefix_ceiling_never_overshoots():
     """Review finding (r4): float ceil(t·n) overshoots the true ceiling
     for ~290 (t, n) combos in t∈[0.01,0.99], n≤2000 (e.g. 0.07·100 →

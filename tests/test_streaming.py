@@ -189,14 +189,17 @@ def test_dedup_stream_watermark_eviction(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     base_t = 1_700_000_000
 
+    def parquet_files():
+        return {os.path.join(in_dir, f) for f in os.listdir(in_dir) if f.endswith(".parquet")}
+
     def drop_file(rows, order):
+        before = parquet_files() if os.path.isdir(in_dir) else set()
         df = spark.createDataFrame(rows, "event_id long, t long")
         df.coalesce(1).write.mode("append").parquet(in_dir)
-        files = sorted(
-            (os.path.join(in_dir, f) for f in os.listdir(in_dir) if f.endswith(".parquet")),
-            key=os.path.getmtime,
-        )
-        os.utime(files[-1], (time.time() + order, time.time() + order))
+        # the file this call wrote: the previous file's mtime was pushed
+        # into the future, so the newest mtime is not always this one
+        (new,) = parquet_files() - before
+        os.utime(new, (time.time() + order, time.time() + order))
 
     # delay 10s. batch1: id=1 @t0 (watermark after batch: t0-10).
     # batch2: id=2 @t0+100 advances the watermark to t0+90, evicting

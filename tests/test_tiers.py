@@ -290,17 +290,6 @@ def _epoch_day(df, col="ts"):
     return es - F.pmod(es, F.lit(86400))
 
 
-def _jobs_in(spark, group, fn):
-    """Number of Spark jobs ``fn()`` runs."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_materialize_full_rebuilds_and_leaves_session_conf(spark, raw, tmp_path):
     # a full rebuild must drop day partitions its input no longer covers,
     # and constructing a store must not switch the caller's session to
@@ -447,7 +436,7 @@ def _watermarks(pipe):
     return sorted(tuple(r) for r in pipe.meta.watermarks(["source"]).collect())
 
 
-def test_lean_increment_lineage_resume_and_job_budget(spark, raw, tmp_path):
+def test_lean_increment_lineage_resume_and_job_budget(spark, raw, tmp_path, jobs_in):
     # lineage rows counted on the 1h write equal a recount of the stored
     # tier over three increments with late rows on several days and one
     # replayed batch; a pipeline reopened on the same store mid-way ends
@@ -476,7 +465,7 @@ def test_lean_increment_lineage_resume_and_job_budget(spark, raw, tmp_path):
                 pipe.run_increment(upto[through], batch[b], run_id)
 
             if name == "continuous" and i == 2:
-                n_jobs = _jobs_in(spark, "lean-increment", increment)
+                n_jobs = jobs_in("lean-increment", increment)
                 assert n_jobs <= 18, n_jobs
             else:
                 increment()
@@ -486,7 +475,7 @@ def test_lean_increment_lineage_resume_and_job_budget(spark, raw, tmp_path):
         pipes[name] = pipe
     # the read set plans through the recorded schemas: no job at all
     store = pipes["continuous"].store
-    assert _jobs_in(spark, "lean-read", lambda: [store.read_tier(t) for t in ("1h", "1d")]) == 0
+    assert jobs_in("lean-read", lambda: [store.read_tier(t) for t in ("1h", "1d")]) == 0
     for tier in ("1m", "1h", "1d"):
         assert _tier_dict(pipes["reopened"].store.read_tier(tier)) == _tier_dict(store.read_tier(tier))
     assert _watermarks(pipes["reopened"]) == _watermarks(pipes["continuous"])
