@@ -253,69 +253,163 @@ def ngram_jaccard_pairs(
     )
 
 
-#: Bloom-summary width for the candidate-verification prune (bits).
-#: 1024 bits = 16 int64 words: fixed 128 B per document at ANY corpus
-#: size, so the summary join scales like the id join it rides on.
+#: Bloom-summary width of the exact-Jaccard pair prune, in buckets. An
+#: element e of a shingle set falls in bucket ``pmod(xxhash64(e),
+#: BLOOM_BITS)``, and a document keeps the distinct buckets its set
+#: fills (``_bi``, at most ``min(|S|, BLOOM_BITS)`` ints). Read at call
+#: time, so a test can narrow it to force bucket collisions.
 BLOOM_BITS = 1024
 
-
-def _bloom_word_cols(set_col: str, bits: int = BLOOM_BITS) -> list:
-    """Per-document Bloom bitmap over xxhash64'd set elements, as
-    ``bits // 64`` SEPARATE long columns (named ``_bw{i}``) rather than
-    an array — keeps both the build fold and the per-pair popcount in
-    plain codegen'd expressions (higher-order array functions are
-    CodegenFallback). One hash per element: element e sets bit
-    ``pmod(xxhash64(e), bits)``.
-
-    Guarantee used by the pair prune: an element common to two sets
-    sets the SAME bit in both bitmaps, so every bit set in ``a`` but
-    not in ``b`` was set by a different element of A \\ B (see
-    ``_bloom_overlap_ubound``)."""
-    n_words = bits // 64
-    bidx = f"transform({set_col}, t -> CAST(pmod(xxhash64(t), {bits}) AS INT))"
-    return [
-        F.expr(
-            f"aggregate(filter({bidx}, bi -> bi DIV 64 = {w}), 0L, "
-            f"(acc, bi) -> acc | shiftleft(1L, bi % 64))"
-        ).alias(f"_bw{w}")
-        for w in range(n_words)
-    ]
+#: Columns the exact-Jaccard set table and prefix index add beside the
+#: caller's id, text and group columns; a caller column of the same name
+#: would be overwritten or made ambiguous.
+_INTERNAL_COLS = frozenset(
+    {"_rts_ws", "_set", "_sz", "_bi", "_tok", "_th", "_df", "_pos", "_is_delta"}
+)
 
 
-def _bloom_slack(set_col: str, bits: int = BLOOM_BITS):
-    """The set's Bloom slack ``|S| − popcount(bitmap)``: the elements
-    whose bit another element of the same set already set. Counted from
-    the distinct bit indices, not from the ``_bw{i}`` words, so the
-    per-document projection does not repeat the word folds."""
-    bidx = f"transform({set_col}, t -> pmod(xxhash64(t), {bits}))"
-    return F.size(set_col) - F.size(F.array_distinct(F.expr(bidx)))
+def _check_args(threshold: float, *cols: str | None) -> None:
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    clash = sorted(c for c in cols if c in _INTERNAL_COLS)
+    if clash:
+        raise ValueError(f"column names {clash} are reserved by the exact-Jaccard operators")
 
 
-def _bloom_side(docs: DataFrame, id_col: str, side: str) -> DataFrame:
-    """One side of the pair prune: id, ``_sz``, ``_sl`` and the Bloom
-    words of the set table, suffixed ``_{side}``."""
-    return docs.select(
-        F.col(id_col).alias(f"id_{side}"),
-        *[F.col(c).alias(f"{c}_{side}")
-          for c in ["_sz", "_sl", *[f"_bw{w}" for w in range(BLOOM_BITS // 64)]]],
+def _set_table(df: DataFrame, id_col: str, text_col: str, keep: list, shingle_k: int) -> DataFrame:
+    """Per-document set table of the exact-Jaccard operators (lazy; the
+    operators checkpoint it): ``keep`` columns, the distinct shingle set
+    ``_set``, its size ``_sz`` and its Bloom summary ``_bi``, the
+    distinct bucket indices of its elements — one xxhash64 per element,
+    evaluated by one projection. ``_set`` is left unsorted: the prefix
+    order comes from the window and the verify only counts the
+    intersection.
+
+    Materialize it once: it feeds the token explode and both sides of
+    the prune and verify joins, and without the checkpoint Catalyst
+    re-plans it per consumer (the r5 plan scanned the parquet six times
+    and pushed the explode-inferred ``size(set) > 0`` filter below the
+    caller's repartition). At cluster scale this is the fingerprint
+    table of the all-pairs papers: size ∝ corpus tokens, spillable,
+    never collected to the driver."""
+    sh = F.array_distinct(shingles_of_words("_rts_ws", shingle_k))
+    bi = F.array_distinct(
+        F.transform("_set", lambda t: F.pmod(F.xxhash64(t), F.lit(BLOOM_BITS)).cast("int"))
+    )
+    return (
+        df.withColumn("_rts_ws", words_col(text_col))
+        .select(id_col, *keep, sh.alias("_set"))
+        .select(id_col, *keep, "_set", F.size("_set").alias("_sz"), bi.alias("_bi"))
     )
 
 
-def _bloom_overlap_ubound(bits: int = BLOOM_BITS):
-    """Upper bound on |A ∩ B| over the joined ``_bloom_side`` columns,
-    all codegen'd: ``Σ_w popcount(a_w & b_w) + min(_sl_a, _sl_b)``
-    (``_sl`` is ``_bloom_slack``).
+def _prefix_index(docs: DataFrame, id_col: str, keep: list, threshold: float) -> DataFrame:
+    """Prefix index over a ``_set_table`` (lazy): per document, the
+    ``xxhash64`` (``_th``) of the first ``|S| − ⌈t·|S|⌉ + 1`` shingles
+    in ascending global document frequency (Bayardo et al. WWW'07),
+    less those whose hash occurs in one document only — such a row can
+    never collide. That filter sits after the window: ``_pos`` counts
+    every token.
 
-    A bit set in ``a`` but not in ``b`` comes from an element of A \\ B,
-    and distinct bits come from distinct elements, so
-    |A ∩ B| ≤ |A| − popcount(a & ~b) = popcount(a & b) + |A| − popcount(a),
-    and the same for B.  (``Σ popcount(a & b)`` alone is NOT a bound:
-    common elements that share one bit are counted once.)"""
-    n_words = bits // 64
-    out = F.bit_count(F.col("_bw0_a").bitwiseAND(F.col("_bw0_b")))
-    for w in range(1, n_words):
-        out = out + F.bit_count(F.col(f"_bw{w}_a").bitwiseAND(F.col(f"_bw{w}_b")))
-    return out + F.least("_sl_a", "_sl_b")
+    Tokens enter the index as their hash (shuffle keys, not payloads):
+    the DF count, the window sort and the candidate self-join run on
+    longs. The order (_df, _th, _tok) is still a total order on tokens,
+    so the pigeonhole prefix guarantee holds; joining on the hash can
+    only add collision candidates, which the prune and the exact verify
+    remove."""
+    from pyspark.sql import Window
+
+    toks = docs.select(
+        id_col, *keep, "_sz", F.explode("_set").alias("_tok")
+    ).withColumn("_th", F.xxhash64("_tok"))
+    dfreq = toks.groupBy("_th").agg(F.count(F.lit(1)).alias("_df"))
+    w = Window.partitionBy(id_col).orderBy("_df", "_th", "_tok")
+    # ceiling with a DOWNWARD bias: float ceil(t*n) can overshoot the
+    # value the float jaccard comparison actually implies (e.g.
+    # 0.07*100 → 7.000000000000001 → ceil 8, yet inter=7/union=100
+    # divides to exactly the threshold double and qualifies). Biasing
+    # the product down by 1e-9 can only LENGTHEN the prefix — more
+    # candidates, never a lost pair — so exactness is preserved in the
+    # safe direction (pinned by test_prefix_ceiling_never_overshoots).
+    alpha = F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
+    return (
+        toks.join(dfreq, "_th")
+        .withColumn("_pos", F.row_number().over(w))
+        .where((F.col("_pos") <= F.col("_sz") - alpha + 1) & (F.col("_df") > 1))
+        .select(id_col, *keep, "_th")
+    )
+
+
+def _bloom_side(docs: DataFrame, id_col: str, side: str) -> DataFrame:
+    """One side of the pair prune: id, ``_sz`` and ``_bi`` of the set
+    table, suffixed ``_{side}``."""
+    return docs.select(
+        F.col(id_col).alias(f"id_{side}"),
+        F.col("_sz").alias(f"_sz_{side}"),
+        F.col("_bi").alias(f"_bi_{side}"),
+    )
+
+
+def _bloom_overlap_ubound():
+    """Upper bound on |A ∩ B| over the joined ``_bloom_side`` columns:
+    ``|_bi_a ∩ _bi_b| + min(_sl_a, _sl_b)``, where the slack
+    ``_sl = _sz − |_bi|`` counts the elements whose bucket another
+    element of the same set already fills.
+
+    A bucket filled by A but not by B holds an element of A \\ B, and
+    distinct buckets hold distinct elements, so
+    |A ∩ B| ≤ |A| − |_bi_a \\ _bi_b| = |_bi_a ∩ _bi_b| + _sl_a, and the
+    same for B. (``|_bi_a ∩ _bi_b|`` alone is NOT a bound: common
+    elements that share a bucket are counted once.)"""
+    def slack(side):
+        return F.col(f"_sz_{side}") - F.size(f"_bi_{side}")
+
+    return F.size(F.array_intersect("_bi_a", "_bi_b")) + F.least(slack("a"), slack("b"))
+
+
+def _verified(cands: DataFrame, sets: DataFrame, id_col: str, set_col: str, threshold: float) -> DataFrame:
+    """Exact verify of candidate pairs ``(id_a, id_b)``: attach both
+    sides' shingle sets and keep ``jaccard ≥ threshold``, with
+    ``inter`` from ``array_intersect``."""
+    sa = sets.select(F.col(id_col).alias("id_a"), F.col(set_col).alias("set_a"))
+    sb = sets.select(F.col(id_col).alias("id_b"), F.col(set_col).alias("set_b"))
+    inter = F.size(F.array_intersect("set_a", "set_b"))
+    union = F.size("set_a") + F.size("set_b") - inter
+    return (
+        cands.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a", "id_b",
+            inter.alias("inter"),
+            union.alias("union_sz"),
+            (inter.cast("double") / union).alias("jaccard"),
+        )
+        .where(F.col("jaccard") >= threshold)
+    )
+
+
+def _pruned_verified(colls: DataFrame, docs: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """Bloom prune, pair-distinct and exact verify of the prefix
+    collisions ``colls`` over the set table ``docs``.
+
+    The prune keeps a collision only if ``_bloom_overlap_ubound`` can
+    still reach the overlap a qualifying pair needs,
+    J ≥ t ⟺ |A∩B| ≥ t/(1+t)·(|A|+|B|), with the ceiling biased down
+    like the prefix length's: the bound is sound, so no qualifying pair
+    is dropped, and the survivors go through the exact verify that
+    produces the output values."""
+    required = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("_sz_a") + F.col("_sz_b"))
+        - F.lit(1e-9)
+    )
+    cands = (
+        colls.join(_bloom_side(docs, id_col, "a"), "id_a")
+        .join(_bloom_side(docs, id_col, "b"), "id_b")
+        .where(_bloom_overlap_ubound() >= required)
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    return _verified(cands, docs, id_col, "_set", threshold)
 
 
 def ngram_jaccard_threshold_pairs(
@@ -338,74 +432,18 @@ def ngram_jaccard_threshold_pairs(
     generation loses NOTHING while the inverted index shrinks to the
     rare tail of each document (hot shingles land at prefix ends and
     mostly drop out: the skew that degenerates the unthresholded index
-    prunes itself). Candidates are then verified with exact
-    ``array_intersect`` over the full shingle sets.
+    prunes itself). Candidates pass a sound Bloom prune and are then
+    verified with exact ``array_intersect`` over the full shingle sets.
 
     This is the scalable EXACT companion to ``lsh_verified_pairs``
     (exact with no LSH recall caveat) and to the unthresholded
     ``ngram_jaccard_pairs`` reporter (which must keep every
     1-shingle-overlap pair and therefore cannot prune)."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from pyspark.sql import Window
-
-    sh = F.array_sort(F.array_distinct(shingles_of_words("_rts_ws", shingle_k)))
+    _check_args(threshold, id_col, text_col, group_col)
     gcols = [group_col] if group_col else []
-    # MATERIALIZE the per-doc shingle-set table once (guide §3.3/§8:
-    # when a subtree is consumed by a self-join plus two verification
-    # joins, Catalyst re-plans it per consumer — the r5 plan scanned the
-    # parquet SIX times and evaluated the O(m log m) shingle expression
-    # ~8× per doc, and the explode-inferred `size(set)>0` filter was
-    # pushed BELOW the caller's parallelizing repartition, serializing
-    # the whole expression tree onto the single-row-group scan task).
-    # localCheckpoint truncates lineage: one scan, one shingle pass, at
-    # the caller's partitioning; every downstream stage reads the
-    # materialized (id, set) rows. At cluster scale this is the
-    # "fingerprint table" materialization of the all-pairs papers —
-    # size ∝ corpus tokens, spillable, never collected to the driver.
-    docs = (
-        df.withColumn("_rts_ws", words_col(text_col))
-        .select(id_col, *gcols, sh.alias("_set"))
-        .select(
-            id_col, *gcols, "_set",
-            F.size("_set").alias("_sz"),
-            _bloom_slack("_set").alias("_sl"),
-            *_bloom_word_cols("_set"),
-        )
-        .localCheckpoint()
-    )
-    # tokens enter the index as their xxhash64 (shuffle keys, not
-    # payloads — guide §2.3): DF counting, the prefix window sort and
-    # the candidate self-join all run on fixed-width longs. The order
-    # (_df, tok_h, tok) is still a TOTAL order on tokens (the string
-    # tie-break only fires on 2⁻⁶⁴ hash collisions), so the pigeonhole
-    # prefix guarantee is unchanged; joining on the hash can only ADD
-    # collision candidates, which the bloom prune + exact verification
-    # remove. No qualifying pair can be lost.
-    toks = docs.select(
-        id_col, *gcols, "_sz",
-        F.explode("_set").alias("tok"),
-    ).withColumn("_th", F.xxhash64("tok"))
-    dfreq = toks.groupBy("_th").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "_th", "tok")
-    # ceiling with a DOWNWARD bias: float ceil(t*n) can overshoot the
-    # value the float jaccard comparison actually implies (e.g.
-    # 0.07*100 → 7.000000000000001 → ceil 8, yet inter=7/union=100
-    # divides to exactly the threshold double and qualifies). Biasing
-    # the product down by 1e-9 can only LENGTHEN the prefix — more
-    # candidates, never a lost pair — so exactness is preserved in the
-    # safe direction (pinned by test_prefix_ceiling_never_overshoots).
-    alpha = F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
-    prefix = (
-        toks.join(dfreq, "_th")
-        .withColumn("_pos", F.row_number().over(w))
-        .where(F.col("_pos") <= F.col("_sz") - alpha + 1)
-        .select(id_col, *gcols, "_th")
-        # both sides of the candidate self-join — materialize the
-        # DF-ordered prefix index once instead of running the
-        # explode→DF-join→window pipeline twice
-        .localCheckpoint()
-    )
+    docs = _set_table(df, id_col, text_col, gcols, shingle_k).localCheckpoint()
+    # both sides of the candidate self-join read one materialized index
+    prefix = _prefix_index(docs, id_col, gcols, threshold).localCheckpoint()
     a = prefix.alias("a")
     b = prefix.alias("b")
     cond = (F.col("a._th") == F.col("b._th")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
@@ -414,45 +452,7 @@ def ngram_jaccard_threshold_pairs(
     colls = a.join(b, cond).select(
         F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
     )
-    # LOSSLESS Bloom prune before the pair-distinct and the exact
-    # verification (guide §3.2 applied to verification): attach each
-    # side's 128-byte bloom summary + set size, keep a collision only
-    # if the overlap upper bound (``_bloom_overlap_ubound``) can still
-    # reach the overlap a qualifying pair NEEDS —
-    # J ≥ t ⟺ |A∩B| ≥ t/(1+t)·(|A|+|B|) (ceiling biased DOWN like
-    # ``alpha`` above: the bound can only get weaker, never drops a
-    # qualifying pair). Bloom collisions only shrink the bits one side
-    # has alone, i.e. only loosen the bound, so false negatives are
-    # impossible; the surviving pairs (a tiny fraction — random pairs
-    # have far more bits of their own than a qualifying pair can) still
-    # go through the exact sorted-set intersection that produces the
-    # output values.
-    required = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("_sz_a") + F.col("_sz_b"))
-        - F.lit(1e-9)
-    )
-    cands = (
-        colls.join(_bloom_side(docs, id_col, "a"), "id_a")
-        .join(_bloom_side(docs, id_col, "b"), "id_b")
-        .where(_bloom_overlap_ubound() >= required)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = docs.select(F.col(id_col).alias("id_a"), F.col("_set").alias("set_a"))
-    sb = docs.select(F.col(id_col).alias("id_b"), F.col("_set").alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            inter.alias("inter"),
-            union.alias("union_sz"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _pruned_verified(colls, docs, id_col, threshold)
 
 
 def incremental_jaccard_pairs(
@@ -469,7 +469,7 @@ def incremental_jaccard_pairs(
     corpus × corpus — the operation every rolling crawl pipeline runs
     per batch.
 
-    Same lossless prefix-filter machinery as
+    Same set table, prefix index, prune and verify as
     ``ngram_jaccard_threshold_pairs`` (Bayardo et al. WWW'07 —
     pigeonhole guarantee over global-DF-ordered prefixes), but the
     candidate join PROBES only delta prefixes against the full index:
@@ -485,51 +485,14 @@ def incremental_jaccard_pairs(
     ``(id_a < id_b, inter, union_sz, jaccard)`` where at least one
     side is a delta doc — the exact pair set the unpruned inequality
     join would produce, restricted to pairs touching delta."""
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from pyspark.sql import Window
-
+    _check_args(threshold, id_col, text_col)
     full = corpus.select(id_col, text_col).withColumn(
         "_is_delta", F.lit(False)
     ).unionByName(
         delta.select(id_col, text_col).withColumn("_is_delta", F.lit(True))
     )
-    sh = F.array_sort(F.array_distinct(shingles_of_words("_rts_ws", shingle_k)))
-    # materialized once for the same reason as ngram_jaccard_threshold_
-    # pairs: the set table feeds the token explode AND both
-    # verification joins, and the prefix index feeds both sides of the
-    # candidate join — without the checkpoint each consumer re-scans
-    # and re-shingles the corpus (6 scans in the r5 physical plan)
-    docs = (
-        full.withColumn("_rts_ws", words_col(text_col))
-        .select(id_col, "_is_delta", sh.alias("_set"))
-        .select(
-            id_col, "_is_delta", "_set",
-            F.size("_set").alias("_sz"),
-            _bloom_slack("_set").alias("_sl"),
-            *_bloom_word_cols("_set"),
-        )
-        .localCheckpoint()
-    )
-    # hashed-token index, same lossless argument as
-    # ngram_jaccard_threshold_pairs (order (_df, tok_h, tok) is total;
-    # hash-equality candidates are a superset; bloom + exact verify
-    # remove the extras)
-    toks = docs.select(
-        id_col, "_is_delta", "_sz", F.explode("_set").alias("tok")
-    ).withColumn("_th", F.xxhash64("tok"))
-    dfreq = toks.groupBy("_th").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "_th", "tok")
-    # same downward-biased ceiling as ngram_jaccard_threshold_pairs:
-    # only ever LENGTHENS the prefix, so no qualifying pair is lost
-    alpha = F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
-    prefix = (
-        toks.join(dfreq, "_th")
-        .withColumn("_pos", F.row_number().over(w))
-        .where(F.col("_pos") <= F.col("_sz") - alpha + 1)
-        .select(id_col, "_is_delta", "_th")
-        .localCheckpoint()
-    )
+    docs = _set_table(full, id_col, text_col, ["_is_delta"], shingle_k).localCheckpoint()
+    prefix = _prefix_index(docs, id_col, ["_is_delta"], threshold).localCheckpoint()
     a = prefix.alias("a")
     b = prefix.where(F.col("_is_delta")).alias("b")
     cond = (
@@ -543,35 +506,7 @@ def incremental_jaccard_pairs(
         F.least(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_a"),
         F.greatest(F.col(f"a.{id_col}"), F.col(f"b.{id_col}")).alias("id_b"),
     )
-    # same lossless bloom prune as ngram_jaccard_threshold_pairs:
-    # drop collisions whose overlap upper bound cannot reach the
-    # required t/(1+t)·(|A|+|B|) before the distinct + exact verify
-    required = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("_sz_a") + F.col("_sz_b"))
-        - F.lit(1e-9)
-    )
-    cands = (
-        colls.join(_bloom_side(docs, id_col, "a"), "id_a")
-        .join(_bloom_side(docs, id_col, "b"), "id_b")
-        .where(_bloom_overlap_ubound() >= required)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = docs.select(F.col(id_col).alias("id_a"), F.col("_set").alias("set_a"))
-    sb = docs.select(F.col(id_col).alias("id_b"), F.col("_set").alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            inter.alias("inter"),
-            union.alias("union_sz"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _pruned_verified(colls, docs, id_col, threshold)
 
 
 def lsh_verified_pairs(
@@ -603,21 +538,7 @@ def lsh_verified_pairs(
         F.col(id_col).alias("_sid"),
         F.array_sort(F.array_distinct(shingles_of_words("_rts_ws", shingle_k))).alias("_sset"),
     ).localCheckpoint()
-    sa = sets_df.withColumnRenamed("_sid", "id_a").withColumnRenamed("_sset", "set_a")
-    sb = sets_df.withColumnRenamed("_sid", "id_b").withColumnRenamed("_sset", "set_b")
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            inter.alias("inter"),
-            union.alias("union_sz"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verified(cands, sets_df, "_sid", "_sset", threshold)
 
 
 # ---------------------------------------------------------------------------

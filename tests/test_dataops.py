@@ -186,11 +186,11 @@ def test_ngram_jaccard_prefix_filter_is_exact(spark):
 
 
 def test_bloom_prune_keeps_identical_large_docs(spark):
-    """Σ popcount(a & b) is not an upper bound on |A ∩ B|: two identical
-    docs of 1,200 distinct words have 1,198 common shingles but set only
-    ~700 of the 1,024 Bloom bits, under the 799 that J ≥ 0.5 needs. Both
-    pruned operators must keep them, as the unpruned ngram_jaccard_pairs
-    does."""
+    """The shared bucket count |_bi_a ∩ _bi_b| is not an upper bound on
+    |A ∩ B|: two identical docs of 1,200 distinct words have 1,198
+    common shingles but fill only ~700 of the 1,024 Bloom buckets, under
+    the 799 that J ≥ 0.5 needs. Both pruned operators must keep them, as
+    the unpruned ngram_jaccard_pairs does."""
     text = " ".join(f"w{i}" for i in range(1200))
     docs = spark.createDataFrame(
         [(1, text), (2, text), (3, "a b c d e")], "doc_id long, text string"
@@ -202,6 +202,57 @@ def test_bloom_prune_keeps_identical_large_docs(spark):
     assert [tuple(r) for r in dedup.incremental_jaccard_pairs(
         docs.where("doc_id != 2"), docs.where("doc_id = 2"), threshold=0.5
     ).select(cols).collect()] == want
+
+
+def _pair_texts(tag, inter, size_a, size_b):
+    """Two texts whose 3-shingle sets have sizes ``size_a``/``size_b``
+    and share exactly ``inter`` shingles: a common run of ``inter + 2``
+    words, then tails of words of their own."""
+    run = [f"{tag}c{i}" for i in range(inter + 2)]
+    return (" ".join(run + [f"{tag}a{i}" for i in range(size_a - inter)]),
+            " ".join(run + [f"{tag}b{i}" for i in range(size_b - inter)]))
+
+
+def test_exact_jaccard_operators_exact_at_64_buckets(spark, monkeypatch):
+    """With a 64-bucket Bloom summary nearly every shingle shares a
+    bucket, so the prune stands on its slack term alone. Both pruned
+    operators must still equal the unpruned reporter filtered at t on
+    pairs exactly at t, identical 1,200-word docs, docs whose shingles
+    all occur once, docs shorter than k words and empty text."""
+    monkeypatch.setattr(dedup, "BLOOM_BITS", 64)
+    t = 0.5
+    texts = []
+    # (inter, |A|, |B|) with inter / (|A| + |B| - inter) == t exactly,
+    # and one just under it
+    for n, (i, sa, sb) in enumerate([(100, 150, 150), (40, 50, 70), (6, 10, 8), (99, 150, 150)]):
+        texts += _pair_texts(f"p{n}", i, sa, sb)
+    big = " ".join(f"w{i}" for i in range(1200))
+    texts += [big, big]
+    texts += [" ".join(f"u{d}x{i}" for i in range(30)) for d in range(4)]
+    texts += ["a b", "a b", "a", "", ""]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    want = {tuple(r) for r in dedup.ngram_jaccard_pairs(docs).where(f"jaccard >= {t}").collect()}
+    assert {(0, 1, 100, 200, 0.5), (2, 3, 40, 80, 0.5), (8, 9, 1198, 1198, 1.0)} <= want
+    assert not any(p[:2] == (6, 7) for p in want)
+    assert {tuple(r) for r in dedup.ngram_jaccard_threshold_pairs(docs, t).collect()} == want
+    delta = F.col("doc_id") % 3 != 0
+    got = {tuple(r) for r in dedup.incremental_jaccard_pairs(docs.where(~delta), docs.where(delta), t).collect()}
+    dset = {r["doc_id"] for r in docs.where(delta).collect()}
+    assert got == {p for p in want if p[0] in dset or p[1] in dset}
+
+
+@pytest.mark.parametrize("col", ["_th", "_sz"])
+def test_exact_jaccard_rejects_reserved_columns(spark, col):
+    """A caller column named like an internal one would be overwritten
+    (``_th`` returned no pairs) or made ambiguous (``_sz``)."""
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c d")], f"{col} long, text string")
+    with pytest.raises(ValueError, match="reserved"):
+        dedup.ngram_jaccard_threshold_pairs(docs, 0.5, id_col=col)
+    with pytest.raises(ValueError, match="reserved"):
+        dedup.incremental_jaccard_pairs(docs, docs, 0.5, id_col=col)
+    with pytest.raises(ValueError, match="reserved"):
+        dedup.ngram_jaccard_threshold_pairs(docs.withColumnRenamed(col, "doc_id")
+                                            .withColumnRenamed("text", col), 0.5, text_col=col)
 
 
 def test_prefix_ceiling_never_overshoots():

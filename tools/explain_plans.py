@@ -122,6 +122,24 @@ def main() -> None:
                    "CartesianProduct" not in plan
                    and "BroadcastNestedLoopJoin" not in plan, plan))
 
+    # 11c. exact-Jaccard set table: the Bloom summary hashes each
+    # shingle once (one xxhash64 in the plan, no per-word bitmap
+    # columns); the operators checkpoint this plan, so audit it lazily
+    set_table = dedup._set_table(docs, "doc_id", "text", [], 3)
+    plan = explain_str(set_table)
+    checks.append(("exact-jaccard set table: one xxhash64 pass, no _bw columns",
+                   plan.count("xxhash64(") == 1 and "_bw" not in plan, plan))
+
+    # 11d. prefix index: rows whose hash occurs in one document are
+    # filtered on _df ABOVE the window (the window must still number
+    # every token)
+    plan = explain_str(dedup._prefix_index(set_table, "doc_id", [], 0.8))
+    df_filter = re.search(r"^\((\d+)\) Filter\n.*\nCondition : .*_df#\d+L > 1", plan, re.M)
+    window = re.search(r"^\((\d+)\) Window", plan, re.M)
+    checks.append(("exact-jaccard prefix index: _df > 1 filter after the window",
+                   bool(df_filter and window)
+                   and int(df_filter.group(1)) > int(window.group(1)), plan))
+
     # 11. mapInArrow codec encode: exactly one Exchange (the block-key
     # repartition), an in-partition Sort (NOT a global sort — no range
     # exchange), then the Arrow eval; groups never shuffle twice
