@@ -8,6 +8,14 @@ pandas UDF (bit-count math is numpy-friendlier than expression trees).
 Candidate generation is always hash-bucket joins (shuffle on band/
 bucket keys — the classic MinHash-LSH plan), never an N² cross join;
 exact pairwise verification runs only inside candidate buckets.
+
+Every operator here shingles through ``shingles``: one codegen'd
+``regexp_extract_all`` per text, no per-shingle lambda. The two exact
+prefix-filter operators (``ngram_jaccard_threshold_pairs``,
+``incremental_jaccard_pairs``) share one core: ``_set_table`` (set,
+size, Bloom summary), ``_prefix_index`` (hashes only; DF by a window,
+no join) and ``_pruned_verified`` (pair-distinct, then one set-table
+join per side feeding a sound Bloom prune and the exact verify).
 """
 
 from __future__ import annotations
@@ -39,36 +47,27 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 def shingles(text_col: str = "text", k: int = 3):
-    """k-word shingles as strings — JVM transform over the word array.
+    """k-word shingles of ``text_col``, fields split on single spaces
+    (the ``words_col`` convention): the i-th shingle is the substring
+    ``concat_ws(' ', slice(split(text, ' '), i, k))``; a text of fewer
+    than k fields gives itself as its one shingle, and null gives ''.
 
-    NOTE: prefer binding the split to a column and using
-    ``shingles_of_words`` — with the split inlined here, the
-    interpreted higher-order transform re-evaluates ``split(text)``
-    per element (O(m²) splits per doc)."""
-    words = words_col(text_col)
-    n = F.size(words)
+    One codegen'd ``regexp_extract_all``, no lambda: every match is
+    zero-width at the start of a field (offset 0, or right after a
+    space) and its lookahead captures that field and the k − 1 after
+    it, so a start with fewer than k − 1 fields after it does not
+    match. Both anchors must stay zero-width: with ``(?:^| )`` the
+    matcher resumes at offset 1 after the empty match at 0, a leading
+    space is never consumed and ``' a b c'`` loses ``'a b c'``. The
+    space test must be the positive ``(?<= )``: the negated
+    ``(?<![^ ])`` also holds between the two halves of a surrogate pair
+    (Java reads the pair as one code point ending past that offset), so
+    ``'😀 b'`` would gain a half-character shingle."""
+    text = F.col(text_col)
+    pattern = f"(?:^|(?<= ))(?=([^ ]*(?: [^ ]*){{{k - 1}}}))"
     return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-
-
-def shingles_of_words(words_col_name: str, k: int = 3):
-    """Same shingle construction over an ALREADY-BOUND word-array
-    column (an attribute, so the per-element lambda body re-slices a
-    materialized array instead of re-splitting the text)."""
-    words = F.col(words_col_name)
-    n = F.size(words)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(words, i, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", words)))
+        F.size(words_col(text)) >= k, F.regexp_extract_all(text, F.lit(pattern), 1)
+    ).otherwise(F.array(F.coalesce(text, F.lit(""))))
 
 
 def minhash_signatures(
@@ -89,9 +88,7 @@ def minhash_signatures(
     every permutation's expression tree — Catalyst's project collapse
     re-evaluated it ``num_perm`` times per row, ~30× slower at sf0.1.
     Values are identical (same xxhash64(shingle, seed+i) definition)."""
-    exploded = df.withColumn("_rts_ws", words_col(text_col)).select(
-        id_col, F.explode(shingles_of_words("_rts_ws", shingle_k)).alias("_sh")
-    )
+    exploded = df.select(id_col, F.explode(shingles(text_col, shingle_k)).alias("_sh"))
     mins = exploded.groupBy(id_col).agg(
         *[
             F.min(F.xxhash64("_sh", F.lit(seed + i))).alias(f"_m{i}")
@@ -211,11 +208,9 @@ def ngram_jaccard_pairs(
     Intended position at scale: verification stage behind
     ``lsh_candidate_pairs`` (see ``lsh_verified_pairs``) or capped
     standalone for modest corpora."""
-    sh = F.array_distinct(shingles_of_words("_rts_ws", shingle_k))
+    sh = F.array_distinct(shingles(text_col, shingle_k))
     gcols = [group_col] if group_col else []
-    toks = df.withColumn("_rts_ws", words_col(text_col)).select(
-        id_col, *gcols, F.explode(sh).alias("tok")
-    )
+    toks = df.select(id_col, *gcols, F.explode(sh).alias("tok"))
     if max_df is not None:
         hot = (
             toks.groupBy("tok")
@@ -264,7 +259,7 @@ BLOOM_BITS = 1024
 #: caller's id, text and group columns; a caller column of the same name
 #: would be overwritten or made ambiguous.
 _INTERNAL_COLS = frozenset(
-    {"_rts_ws", "_set", "_sz", "_bi", "_tok", "_th", "_df", "_pos", "_is_delta"}
+    {"_set", "_sz", "_bi", "_tok", "_th", "_df", "_pos", "_is_delta"}
 )
 
 
@@ -279,11 +274,11 @@ def _check_args(threshold: float, *cols: str | None) -> None:
 def _set_table(df: DataFrame, id_col: str, text_col: str, keep: list, shingle_k: int) -> DataFrame:
     """Per-document set table of the exact-Jaccard operators (lazy; the
     operators checkpoint it): ``keep`` columns, the distinct shingle set
-    ``_set``, its size ``_sz`` and its Bloom summary ``_bi``, the
-    distinct bucket indices of its elements — one xxhash64 per element,
-    evaluated by one projection. ``_set`` is left unsorted: the prefix
-    order comes from the window and the verify only counts the
-    intersection.
+    ``_set`` (``shingles``: one codegen'd regex pass per text), its size
+    ``_sz`` and its Bloom summary ``_bi``, the distinct bucket indices
+    of its elements — one xxhash64 per element. ``_set`` is left
+    unsorted: the prefix order comes from the window and the verify only
+    counts the intersection.
 
     Materialize it once: it feeds the token explode and both sides of
     the prune and verify joins, and without the checkpoint Catalyst
@@ -292,38 +287,45 @@ def _set_table(df: DataFrame, id_col: str, text_col: str, keep: list, shingle_k:
     caller's repartition). At cluster scale this is the fingerprint
     table of the all-pairs papers: size ∝ corpus tokens, spillable,
     never collected to the driver."""
-    sh = F.array_distinct(shingles_of_words("_rts_ws", shingle_k))
+    sh = F.array_distinct(shingles(text_col, shingle_k))
     bi = F.array_distinct(
         F.transform("_set", lambda t: F.pmod(F.xxhash64(t), F.lit(BLOOM_BITS)).cast("int"))
     )
-    return (
-        df.withColumn("_rts_ws", words_col(text_col))
-        .select(id_col, *keep, sh.alias("_set"))
-        .select(id_col, *keep, "_set", F.size("_set").alias("_sz"), bi.alias("_bi"))
+    return df.select(id_col, *keep, sh.alias("_set")).select(
+        id_col, *keep, "_set", F.size("_set").alias("_sz"), bi.alias("_bi")
     )
 
 
 def _prefix_index(docs: DataFrame, id_col: str, keep: list, threshold: float) -> DataFrame:
     """Prefix index over a ``_set_table`` (lazy): per document, the
     ``xxhash64`` (``_th``) of the first ``|S| − ⌈t·|S|⌉ + 1`` shingles
-    in ascending global document frequency (Bayardo et al. WWW'07),
-    less those whose hash occurs in one document only — such a row can
-    never collide. That filter sits after the window: ``_pos`` counts
-    every token.
+    in ascending (global document frequency, hash) order (Bayardo et al.
+    WWW'07), less those whose hash occurs in one row only — such a row
+    can never collide. That filter sits after the window: ``_pos``
+    counts every token.
 
-    Tokens enter the index as their hash (shuffle keys, not payloads):
-    the DF count, the window sort and the candidate self-join run on
-    longs. The order (_df, _th, _tok) is still a total order on tokens,
-    so the pigeonhole prefix guarantee holds; joining on the hash can
-    only add collision candidates, which the prune and the exact verify
-    remove."""
+    Only hashes leave the explode, so the plan is two exchanges of longs
+    and no join: ``_df`` is a count over a window partitioned by
+    ``_th`` (no aggregate joined back), then ``_pos`` a row number over
+    the document ordered by ``(_df, _th)``. The shingle string is not
+    carried past the hash: the prefix bound needs no tie-break inside a
+    hash. Let c* be the first hash A and B share in this order.
+    Every row of A before c* has a hash B lacks, so it is a distinct
+    shingle of A \\ B: at most |A| − α rows precede c*, and c* lies in
+    both prefixes. Joining on the hash can only add collision
+    candidates, which the prune and the exact verify remove.
+
+    Skew: the heaviest ``_th`` window partition holds every row of the
+    most frequent shingle. Its sort spills, but AQE's skew-join split,
+    which divides a hot join key, does not apply to a window;
+    ``tools/dedup_stress.py --exact`` reports that stage's heaviest
+    task."""
     from pyspark.sql import Window
 
-    toks = docs.select(
-        id_col, *keep, "_sz", F.explode("_set").alias("_tok")
-    ).withColumn("_th", F.xxhash64("_tok"))
-    dfreq = toks.groupBy("_th").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy(id_col).orderBy("_df", "_th", "_tok")
+    toks = docs.select(id_col, *keep, "_sz", F.explode("_set").alias("_tok")).select(
+        id_col, *keep, "_sz", F.xxhash64("_tok").alias("_th")
+    )
+    w = Window.partitionBy(id_col).orderBy("_df", "_th")
     # ceiling with a DOWNWARD bias: float ceil(t*n) can overshoot the
     # value the float jaccard comparison actually implies (e.g.
     # 0.07*100 → 7.000000000000001 → ceil 8, yet inter=7/union=100
@@ -333,26 +335,31 @@ def _prefix_index(docs: DataFrame, id_col: str, keep: list, threshold: float) ->
     # safe direction (pinned by test_prefix_ceiling_never_overshoots).
     alpha = F.ceil(F.lit(threshold) * F.col("_sz") - F.lit(1e-9))
     return (
-        toks.join(dfreq, "_th")
+        toks.withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("_th")))
         .withColumn("_pos", F.row_number().over(w))
         .where((F.col("_pos") <= F.col("_sz") - alpha + 1) & (F.col("_df") > 1))
         .select(id_col, *keep, "_th")
     )
 
 
-def _bloom_side(docs: DataFrame, id_col: str, side: str) -> DataFrame:
-    """One side of the pair prune: id, ``_sz`` and ``_bi`` of the set
-    table, suffixed ``_{side}``."""
-    return docs.select(
-        F.col(id_col).alias(f"id_{side}"),
-        F.col("_sz").alias(f"_sz_{side}"),
-        F.col("_bi").alias(f"_bi_{side}"),
-    )
+def _with_sides(pairs: DataFrame, docs: DataFrame, id_col: str, cols: list) -> DataFrame:
+    """Attach ``cols`` of the per-document table ``docs`` to both sides
+    of the id pairs ``(id_a, id_b)``, suffixed ``_a``/``_b``: one
+    equi-join per side."""
+    for side in ("a", "b"):
+        pairs = pairs.join(
+            docs.select(
+                F.col(id_col).alias(f"id_{side}"),
+                *[F.col(c).alias(f"{c}_{side}") for c in cols],
+            ),
+            f"id_{side}",
+        )
+    return pairs
 
 
 def _bloom_overlap_ubound():
-    """Upper bound on |A ∩ B| over the joined ``_bloom_side`` columns:
-    ``|_bi_a ∩ _bi_b| + min(_sl_a, _sl_b)``, where the slack
+    """Upper bound on |A ∩ B| over the ``_sz`` and ``_bi`` columns of
+    both sides: ``|_bi_a ∩ _bi_b| + min(_sl_a, _sl_b)``, where the slack
     ``_sl = _sz − |_bi|`` counts the elements whose bucket another
     element of the same set already fills.
 
@@ -367,33 +374,29 @@ def _bloom_overlap_ubound():
     return F.size(F.array_intersect("_bi_a", "_bi_b")) + F.least(slack("a"), slack("b"))
 
 
-def _verified(cands: DataFrame, sets: DataFrame, id_col: str, set_col: str, threshold: float) -> DataFrame:
-    """Exact verify of candidate pairs ``(id_a, id_b)``: attach both
-    sides' shingle sets and keep ``jaccard ≥ threshold``, with
+def _verified(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Exact verify of id pairs carrying both sides' shingle sets
+    (``_set_a``, ``_set_b``): keep ``jaccard ≥ threshold``, with
     ``inter`` from ``array_intersect``."""
-    sa = sets.select(F.col(id_col).alias("id_a"), F.col(set_col).alias("set_a"))
-    sb = sets.select(F.col(id_col).alias("id_b"), F.col(set_col).alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size("set_a") + F.size("set_b") - inter
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            inter.alias("inter"),
-            union.alias("union_sz"),
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    inter = F.size(F.array_intersect("_set_a", "_set_b"))
+    union = F.size("_set_a") + F.size("_set_b") - inter
+    return pairs.select(
+        "id_a", "id_b",
+        inter.alias("inter"),
+        union.alias("union_sz"),
+        (inter.cast("double") / union).alias("jaccard"),
+    ).where(F.col("jaccard") >= threshold)
 
 
 def _pruned_verified(colls: DataFrame, docs: DataFrame, id_col: str, threshold: float) -> DataFrame:
-    """Bloom prune, pair-distinct and exact verify of the prefix
+    """Pair-distinct, Bloom prune and exact verify of the prefix
     collisions ``colls`` over the set table ``docs``.
 
-    The prune keeps a collision only if ``_bloom_overlap_ubound`` can
-    still reach the overlap a qualifying pair needs,
+    The distinct runs first, on the id pairs alone, so each surviving
+    pair joins the set table once per side and carries ``_sz``, ``_bi``
+    and ``_set`` into both the prune and the verify (2 joins, not 4).
+    The prune keeps a pair only if ``_bloom_overlap_ubound`` can still
+    reach the overlap a qualifying pair needs,
     J ≥ t ⟺ |A∩B| ≥ t/(1+t)·(|A|+|B|), with the ceiling biased down
     like the prefix length's: the bound is sound, so no qualifying pair
     is dropped, and the survivors go through the exact verify that
@@ -402,14 +405,8 @@ def _pruned_verified(colls: DataFrame, docs: DataFrame, id_col: str, threshold: 
         F.lit(threshold / (1.0 + threshold)) * (F.col("_sz_a") + F.col("_sz_b"))
         - F.lit(1e-9)
     )
-    cands = (
-        colls.join(_bloom_side(docs, id_col, "a"), "id_a")
-        .join(_bloom_side(docs, id_col, "b"), "id_b")
-        .where(_bloom_overlap_ubound() >= required)
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return _verified(cands, docs, id_col, "_set", threshold)
+    pairs = _with_sides(colls.distinct(), docs, id_col, ["_sz", "_bi", "_set"])
+    return _verified(pairs.where(_bloom_overlap_ubound() >= required), threshold)
 
 
 def ngram_jaccard_threshold_pairs(
@@ -425,7 +422,7 @@ def ngram_jaccard_threshold_pairs(
     Search", WWW 2007; Chaudhuri/Ganti/Kaushik SSJoin, ICDE 2006).
 
     Each document's distinct shingles are ordered by ascending GLOBAL
-    document frequency (rarest first, ties by shingle); only the first
+    document frequency (rarest first, ties by shingle hash); only the first
     ``|S| − ⌈t·|S|⌉ + 1`` shingles are indexed. Pigeonhole guarantee:
     J(A,B) ≥ t ⟹ |A∩B| ≥ ⌈t·max(|A|,|B|)⌉, and two sets sharing that
     many elements must collide inside these prefixes — so candidate
@@ -476,7 +473,7 @@ def incremental_jaccard_pairs(
     candidate cost ∝ |delta| × collision rate, never |corpus|².
     Corpus-corpus pairs are excluded structurally (the probe side is
     delta); delta-delta pairs are kept once via id ordering. At real
-    scale the corpus-side prefix index and DF table are the
+    scale the corpus-side prefix index and its DF counts are the
     materialize-once artifacts (recompute DF over corpus∪delta only
     shifts prefix ORDER, which affects efficiency, not correctness —
     any consistent global token order preserves the pigeonhole bound).
@@ -534,11 +531,10 @@ def lsh_verified_pairs(
     # per consumer
     sigs = minhash_signatures(df, id_col, text_col, num_perm, shingle_k, seed).localCheckpoint()
     cands = lsh_candidate_pairs(sigs, id_col, bands, rows_per_band)
-    sets_df = df.withColumn("_rts_ws", words_col(text_col)).select(
-        F.col(id_col).alias("_sid"),
-        F.array_sort(F.array_distinct(shingles_of_words("_rts_ws", shingle_k))).alias("_sset"),
+    sets_df = df.select(
+        id_col, F.array_distinct(shingles(text_col, shingle_k)).alias("_set")
     ).localCheckpoint()
-    return _verified(cands, sets_df, "_sid", "_sset", threshold)
+    return _verified(_with_sides(cands, sets_df, id_col, ["_set"]), threshold)
 
 
 # ---------------------------------------------------------------------------

@@ -160,6 +160,43 @@ def test_lsh_verified_pairs_exact_jaccard_on_candidates(spark):
     assert abs(out[("a", "b")]["jaccard"] - expect) < 1e-12
 
 
+def test_shingles_regex_equals_split_slice_reference(spark):
+    """``dedup.shingles`` (one regexp_extract_all) yields the same array,
+    in the same order, as the split/slice/concat_ws construction it
+    replaced, for k ∈ {1, 2, 3, 5}: runs of spaces, leading/trailing
+    spaces, tabs and newlines inside fields, unicode, fewer than k and
+    exactly k fields, '' and null, and a seeded random batch. A leading
+    space is the case a ``(?:^| )`` anchor gets wrong."""
+    import random
+
+    def reference(k):
+        words = F.split(F.col("text"), " ")
+        n = F.size(words)
+        return F.when(
+            n >= k,
+            F.transform(
+                F.sequence(F.lit(1), n - F.lit(k - 1)),
+                lambda i: F.concat_ws(" ", F.slice(words, i, k)),
+            ),
+        ).otherwise(F.array(F.concat_ws(" ", words)))
+
+    texts = [
+        "a b c d e f", "a  b   c", " a b c", "a b c ", "  a b  ", " ", "   ",
+        "a\tb c\nd e", "\t\n", "é 中 a 😀 b", "中文 字  符", "a", "a b",
+        "a b c", "a b c d e", "", None,
+    ]
+    rng = random.Random(1009)
+    alphabet = ["a", "b", "c", " ", "  ", "\t", "\n", "é", "中", "😀"]
+    texts += ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 24)))
+              for _ in range(400)]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
+    for k in (1, 2, 3, 5):
+        rows = df.select("i", dedup.shingles("text", k).alias("got"),
+                         reference(k).alias("want")).collect()
+        bad = [(texts[r["i"]], r["got"], r["want"]) for r in rows if r["got"] != r["want"]]
+        assert not bad, (k, bad[:3])
+
+
 def test_ngram_jaccard_prefix_filter_is_exact(spark):
     """Prefix filtering must lose NOTHING: the thresholded operator's
     output equals the unthresholded inverted-index reporter filtered at

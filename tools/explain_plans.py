@@ -140,6 +140,37 @@ def main() -> None:
                    bool(df_filter and window)
                    and int(df_filter.group(1)) > int(window.group(1)), plan))
 
+    # 11e. shingles come from one regexp_extract_all, not the interpreted
+    # transform(sequence(...), i -> concat_ws(slice(...))) lambda; the one
+    # lambda left is the Bloom bucket map
+    plan = explain_str(set_table)
+    checks.append(("exact-jaccard set table: regex shingles, no sequence/slice lambda",
+                   "regexp_extract_all(" in plan and "sequence(" not in plan
+                   and "slice(" not in plan and plan.count("lambdafunction(") == 1, plan))
+
+    # 11f. prefix index: DF is a window count, not an aggregate joined
+    # back; two hash Exchanges (on _th, then on the id) and the windows
+    # order on the long columns only (the shingle string is not carried)
+    plan = explain_str(dedup._prefix_index(set_table, "doc_id", [], 0.8))
+    parts = re.findall(r"^\(\d+\) Exchange\n.*\nArguments: hashpartitioning\((\w+)#", plan, re.M)
+    orders = re.findall(r"^\(\d+\) Window\n.*\nArguments: .*\], \[(.*)\]$", plan, re.M)
+    order_cols = {c for o in orders for c in re.findall(r"(\w+)#\d+L? ASC", o)}
+    carried = re.findall(r"^\(\d+\) (?:Exchange|Sort|Window)\nInput \[\d+\]: \[(.*)\]$", plan, re.M)
+    checks.append(("exact-jaccard prefix index: no join, Exchanges on _th then id, long sort keys",
+                   "Join" not in plan and parts == ["_th", "doc_id"]
+                   and order_cols == {"_df", "_th"}
+                   and not any("_tok" in c for c in carried), plan))
+
+    # 11g. prune + verify: the pair-distinct runs on the id pairs first
+    # (every HashAggregate numbered before any join), then one set-table
+    # join per side carries _sz, _bi and _set into prune and verify
+    colls = spark.range(8).selectExpr("id AS id_a", "id + 1 AS id_b")
+    plan = explain_str(dedup._pruned_verified(colls, set_table, "doc_id", 0.8))
+    joins = [int(i) for i in re.findall(r"^\((\d+)\) \w*Join", plan, re.M)]
+    aggs = [int(i) for i in re.findall(r"^\((\d+)\) HashAggregate", plan, re.M)]
+    checks.append(("exact-jaccard prune+verify: distinct below one set-table join per side",
+                   len(joins) == 2 and bool(aggs) and max(aggs) < min(joins), plan))
+
     # 11. mapInArrow codec encode: exactly one Exchange (the block-key
     # repartition), an in-partition Sort (NOT a global sort — no range
     # exchange), then the Arrow eval; groups never shuffle twice

@@ -50,8 +50,9 @@ LSH_VERIFY_THRESHOLD = 0.5
 
 
 def shingles(text: str, k: int) -> list[str]:
-    """= operators/dedup.shingles (split on literal space, 1-based
-    slide, short-text fallback to the single joined shingle)."""
+    """The shingles of ``operators.dedup.shingles``: k consecutive
+    fields of the split on a literal space, joined by one space; a text
+    of fewer than k fields is its own single shingle."""
     ws = text.split(" ")
     if len(ws) >= k:
         return [" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)]
