@@ -1369,27 +1369,9 @@ def _q_acd_loglik_weibull(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit oracle pins, here driver-gating F7/F9's Weibull branch. The
     oracle reruns the ψ recursion AND the Weibull logpdf sum as a
     sequential RECURSIVE CTE with the kernel's exact op order."""
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql import types as _T
-
-    series = _duration_series(spark, sf_dir)
     spec = acd_stats.AcdSpec(p=1, q=1, law="weibull", law_params={"k": _WEIB_K})
-    out_schema = _T.StructType(
-        [
-            _T.StructField("key", _T.StringType()),
-            _T.StructField("loglik_raw", _T.DoubleType()),
-        ]
-    )
-
-    def kfn(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        pdf = pdf.sort_values("t", kind="mergesort")
-        x = pdf["v"].to_numpy(dtype=_np.float64)
-        ll = acd_stats.loglik_at_params(x, 0.2, [0.2], [0.3], spec)
-        return _pd.DataFrame({"key": [pdf["key"].iloc[0]], "loglik_raw": [ll]})
-
-    out = series.groupBy("key").applyInPandas(kfn, out_schema)
-    return out.select("key", _sci(F.col("loglik_raw")).alias("loglik_weibull"))
+    out = acd_stats.acd_loglik_fixed(_duration_series(spark, sf_dir), ["key"], spec, 0.2, [0.2], [0.3])
+    return out.select("key", _sci(F.col("loglik")).alias("loglik_weibull"))
 
 
 def _weib_term_sql(v: str, p: str) -> str:
@@ -1460,29 +1442,11 @@ def _q_acd_loglik_gengamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     innovations.rs:360-365, 483-499), completing driver coverage of the
     three innovation laws (exponential in the fit oracle, Weibull in
     acd_loglik_weibull)."""
-    import numpy as _np
-    import pandas as _pd
-    from pyspark.sql import types as _T
-
-    series = _duration_series(spark, sf_dir)
     spec = acd_stats.AcdSpec(
         p=1, q=1, law="generalized_gamma", law_params={"p": _GG_P, "d": _GG_D}
     )
-    out_schema = _T.StructType(
-        [
-            _T.StructField("key", _T.StringType()),
-            _T.StructField("loglik_raw", _T.DoubleType()),
-        ]
-    )
-
-    def kfn(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        pdf = pdf.sort_values("t", kind="mergesort")
-        x = pdf["v"].to_numpy(dtype=_np.float64)
-        ll = acd_stats.loglik_at_params(x, 0.2, [0.2], [0.3], spec)
-        return _pd.DataFrame({"key": [pdf["key"].iloc[0]], "loglik_raw": [ll]})
-
-    out = series.groupBy("key").applyInPandas(kfn, out_schema)
-    return out.select("key", _sci(F.col("loglik_raw")).alias("loglik_gengamma"))
+    out = acd_stats.acd_loglik_fixed(_duration_series(spark, sf_dir), ["key"], spec, 0.2, [0.2], [0.3])
+    return out.select("key", _sci(F.col("loglik")).alias("loglik_gengamma"))
 
 
 def _gg_term_sql(v: str, p: str) -> str:
@@ -1560,7 +1524,6 @@ def _q_acd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every tested scale, where the zero start stalls at max_iter on
     # one sf0.1 key and costs ~1.7× the iterations elsewhere
     import numpy as _np
-    import pandas as _pd
     from pyspark.sql import types as _T
 
     from rust_timeseries_spark.constants import STATIONARITY_MARGIN as _SM
@@ -1569,33 +1532,22 @@ def _q_acd_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     theta0 = _S.params_to_theta(
         0.1, _np.array([0.05]), _np.array([0.8]), 1.0 - _SM - 0.85
     )
-    out_schema = _T.StructType(
-        [
-            _T.StructField("key", _T.StringType()),
-            _T.StructField("loglik0_raw", _T.DoubleType()),
-            _T.StructField("converged", _T.BooleanType()),
-            _T.StructField("fit_improved", _T.BooleanType()),
-        ]
-    )
+    fields = [
+        _T.StructField("loglik0_raw", _T.DoubleType()),
+        _T.StructField("converged", _T.BooleanType()),
+        _T.StructField("fit_improved", _T.BooleanType()),
+    ]
 
     # one kernel pass per key: the fit AND the fixed-θ₀ loglik share
     # the sorted series (a join of acd_fit with acd_loglik_fixed would
     # execute the duration-series subplan twice)
-    def kfn(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        pdf = pdf.sort_values("t", kind="mergesort")
+    def fit_row(pdf) -> dict:
         x = pdf["v"].to_numpy(dtype=_np.float64)
         r = acd_stats.fit_series(x, theta0, spec)
         ll0 = acd_stats.loglik_at_params(x, 0.2, [0.2], [0.3], spec)
-        return _pd.DataFrame(
-            {
-                "key": [pdf["key"].iloc[0]],
-                "loglik0_raw": [ll0],
-                "converged": [r["converged"]],
-                "fit_improved": [r["loglik"] >= ll0],
-            }
-        )
+        return {"loglik0_raw": [ll0], "converged": [r["converged"]], "fit_improved": [r["loglik"] >= ll0]}
 
-    out = series.groupBy("key").applyInPandas(kfn, out_schema)
+    out = recursion.per_key(series, ["key"], "t", ["v"], fields, fit_row)
     return out.select(
         "key", _sci(F.col("loglik0_raw")).alias("loglik0"), "converged", "fit_improved"
     )
@@ -1675,36 +1627,26 @@ def _q_acd_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     as VALUES literals after being verified identical (same pattern as
     the dedup oracles)."""
     import numpy as _np
-    import pandas as _pd
     from pyspark.sql import types as _T
 
     series = _duration_series(spark, sf_dir)
     spec = acd_stats.AcdSpec(p=1, q=1)
     theta = _np.array(_COV_THETA, dtype=_np.float64)
-    out_schema = _T.StructType(
-        [
-            _T.StructField("key", _T.StringType()),
-            _T.StructField("cov_classical_arr", _T.ArrayType(_T.DoubleType())),
-            _T.StructField("cov_robust_arr", _T.ArrayType(_T.DoubleType())),
-        ]
-    )
+    fields = [
+        _T.StructField("cov_classical_arr", _T.ArrayType(_T.DoubleType())),
+        _T.StructField("cov_robust_arr", _T.ArrayType(_T.DoubleType())),
+    ]
 
-    def kfn(pdf: _pd.DataFrame) -> _pd.DataFrame:
-        pdf = pdf.sort_values("t", kind="mergesort")
+    def cov_row(pdf) -> dict:
         x = pdf["v"].to_numpy(dtype=_np.float64)
         classical = acd_stats.covariance_series(x, theta, spec, robust=False)
         robust = acd_stats.covariance_series(
             x, theta, spec, robust=True, kernel="bartlett", bandwidth=_COV_BANDWIDTH
         )
-        return _pd.DataFrame(
-            {
-                "key": [pdf["key"].iloc[0]],
-                "cov_classical_arr": [classical.reshape(-1).tolist()],
-                "cov_robust_arr": [robust.reshape(-1).tolist()],
-            }
-        )
+        return {"cov_classical_arr": [classical.reshape(-1).tolist()],
+                "cov_robust_arr": [robust.reshape(-1).tolist()]}
 
-    out = series.groupBy("key").applyInPandas(kfn, out_schema)
+    out = recursion.per_key(series, ["key"], "t", ["v"], fields, cov_row)
     return out.select(
         "key",
         F.posexplode(F.arrays_zip("cov_classical_arr", "cov_robust_arr")).alias("pos", "z"),

@@ -259,177 +259,6 @@ def decode_gorilla_f64_py(blob: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# vectorized encoders (SURVEY.md §4.3.2: "bit-packing in pure numpy")
-# ---------------------------------------------------------------------------
-
-def _pack_fields(values: np.ndarray, nbits: np.ndarray) -> bytes:
-    """MSB-first bit-pack variable-width fields, vectorized.
-
-    ``values[i]`` occupies ``nbits[i]`` bits (≤ 64); fields with
-    nbits == 0 contribute nothing. Each field spans ≤ 9 output bytes;
-    for byte-offset j ∈ 0..8 one vectorized pass ORs every field's j-th
-    byte chunk into the buffer (``np.bitwise_or.at`` resolves fields
-    sharing a byte). Byte-identical to the BitWriter path; measured
-    roughly at parity with it on this CPython/numpy (ufunc.at is the
-    bottleneck) — kept as the array-shaped formulation a numba/C
-    backend would accelerate, and as a cross-check of the bitstream.
-    """
-    values = values.astype(np.uint64)
-    nbits = nbits.astype(np.int64)
-    mask_nz = nbits > 0
-    values, nbits = values[mask_nz], nbits[mask_nz]
-    if len(values) == 0:
-        return b""
-    ends = np.cumsum(nbits)
-    starts = ends - nbits
-    total_bits = int(ends[-1])
-    buf = np.zeros((total_bits + 7) // 8, dtype=np.uint8)
-    first_byte = starts >> 3
-    last_byte = (ends - 1) >> 3
-    max_span = int((last_byte - first_byte).max()) + 1
-    for j in range(max_span):
-        byte_idx = first_byte + j
-        active = byte_idx <= last_byte
-        if not active.any():
-            break
-        # MSB-first: shift so the byte's low 8 bits hold this chunk
-        shift = ends[active].astype(np.int64) - 8 * (byte_idx[active] + 1)
-        v = values[active]
-        pos = shift >= 0
-        chunk = np.zeros(len(v), dtype=np.uint64)
-        chunk[pos] = (v[pos] >> shift[pos].astype(np.uint64)) & np.uint64(0xFF)
-        neg = ~pos
-        chunk[neg] = (v[neg] << (-shift[neg]).astype(np.uint64)) & np.uint64(0xFF)
-        np.bitwise_or.at(buf, byte_idx[active], chunk.astype(np.uint8))
-    return buf.tobytes()
-
-
-def encode_dod_int64_vec(values: np.ndarray) -> bytes:
-    """Vectorized delta-of-delta encoder — byte-identical output to
-    ``encode_dod_int64`` (tested), ~20× faster on large blocks: the
-    dod classification has no sequential dependence, so control and
-    payload fields are computed as arrays and packed in one pass."""
-    v = np.asarray(values, dtype=np.int64)
-    n = len(v)
-    w = BitWriter()
-    _write_varint(w, n)
-    if n == 0:
-        return w.getvalue()
-    w.write(int(v[0]) & _U64, 64)
-    if n == 1:
-        return w.getvalue()
-    deltas = np.diff(v)
-    _write_varint(w, zigzag_encode(int(deltas[0])))
-    header = w.getvalue()  # whole bytes: varints + 64-bit are 8-aligned
-    if n == 2:
-        return header
-    dods = np.diff(deltas)
-    m = len(dods)
-    ctrl = np.empty(m, dtype=np.uint64)
-    ctrl_bits = np.empty(m, dtype=np.int64)
-    payload = np.zeros(m, dtype=np.uint64)
-    payload_bits = np.zeros(m, dtype=np.int64)
-
-    zero = dods == 0
-    ctrl[zero] = 0
-    ctrl_bits[zero] = 1
-    remaining = ~zero
-    for ctrl_val, cb, pb, half in _DOD_BUCKETS:
-        in_b = remaining & (dods >= -half) & (dods < half)
-        ctrl[in_b] = ctrl_val
-        ctrl_bits[in_b] = cb
-        payload[in_b] = (dods[in_b] + half).astype(np.uint64)
-        payload_bits[in_b] = pb
-        remaining &= ~in_b
-    ctrl[remaining] = 0b1111
-    ctrl_bits[remaining] = 4
-    payload[remaining] = dods[remaining].view(np.uint64)
-    payload_bits[remaining] = 64
-
-    fields = np.empty(2 * m, dtype=np.uint64)
-    fbits = np.empty(2 * m, dtype=np.int64)
-    fields[0::2], fbits[0::2] = ctrl, ctrl_bits
-    fields[1::2], fbits[1::2] = payload, payload_bits
-    return header + _pack_fields(fields, fbits)
-
-
-def _clz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-leading-zeros for uint64 (binary reduction —
-    float log2 would lose precision above 2^53)."""
-    x = x.astype(np.uint64)
-    n = np.zeros(len(x), dtype=np.int64)
-    y = x.copy()
-    for bits in (32, 16, 8, 4, 2, 1):
-        has_high = y >= (np.uint64(1) << np.uint64(bits))
-        n[has_high] += bits
-        y[has_high] >>= np.uint64(bits)
-    # n = floor(log2(x)) for x>0 → lead = 63 − n; lead = 64 for x == 0
-    lead = 63 - n
-    lead[x == 0] = 64
-    return lead
-
-
-def _ctz64(x: np.ndarray) -> np.ndarray:
-    """Vectorized count-trailing-zeros for uint64 (x & -x is a power of
-    two; reuse _clz64: tz = 63 − clz(x & −x))."""
-    x = x.astype(np.uint64)
-    low = x & (np.uint64(0) - x)
-    return 63 - _clz64(low)
-
-
-def encode_gorilla_f64_vec(values: np.ndarray) -> bytes:
-    """Gorilla float encoder with vectorized lead/trail computation and
-    vectorized packing — byte-identical to ``encode_gorilla_f64``. The
-    window-reuse decision is an inherently sequential scan, but per
-    value it is a handful of scalar ops; all heavy math is array-level."""
-    bits = np.asarray(values, dtype=np.float64).view(np.uint64)
-    n = len(bits)
-    w = BitWriter()
-    _write_varint(w, n)
-    if n == 0:
-        return w.getvalue()
-    w.write(int(bits[0]), 64)
-    header = w.getvalue()
-    if n == 1:
-        return header
-    xors = bits[1:] ^ bits[:-1]
-    lead_a = np.minimum(_clz64(xors), 31)
-    trail_a = _ctz64(xors)
-    # fields: worst case 3 per value (ctrl, lead+mean header, payload)
-    fields: list[int] = []
-    fbits: list[int] = []
-    prev_lead, prev_mean = 65, 0
-    xs = xors.tolist()
-    leads = lead_a.tolist()
-    trails = trail_a.tolist()
-    for i in range(len(xs)):
-        x = xs[i]
-        if x == 0:
-            fields.append(0)
-            fbits.append(1)
-            continue
-        lead, trail = leads[i], trails[i]
-        mean = 64 - lead - trail
-        if lead >= prev_lead and prev_lead + prev_mean + trail >= 64 and prev_lead != 65:
-            fields.append(0b10)
-            fbits.append(2)
-            fields.append(x >> (64 - prev_lead - prev_mean))
-            fbits.append(prev_mean)
-        else:
-            fields.append(0b11)
-            fbits.append(2)
-            fields.append(lead)
-            fbits.append(5)
-            fields.append(mean & 63)
-            fbits.append(6)
-            fields.append(x >> trail)
-            fbits.append(mean)
-            prev_lead, prev_mean = lead, mean
-    return header + _pack_fields(
-        np.array(fields, dtype=np.uint64), np.array(fbits, dtype=np.int64)
-    )
-
-# ---------------------------------------------------------------------------
 # native dispatch: the compiled C kernels (rust_timeseries_spark/native)
 # are byte-identical to the *_py paths above (asserted by
 # tests/test_compression.py on every run where a C compiler exists) and

@@ -1,11 +1,14 @@
 """EWMA / ACD(p,q) ψ-recursion and forecast kernels.
 
 The one operator family Spark windows cannot express (each output feeds
-the next input), so it runs as per-key ``applyInPandas`` kernels: Spark
-shuffles each key's rows to one Python worker, Arrow hands the kernel a
-contiguous batch, numpy runs the exact reference recursion, Arrow hands
-the result back. Shared-nothing across keys — the distributed analogue
-of the reference's single-threaded per-series loop.
+the next input), so it runs as per-key Python kernels through one
+boundary, ``per_key``: Spark shuffles each key's rows to one Python
+worker, Arrow hands the kernel a contiguous batch, numpy runs the exact
+reference recursion, Arrow hands the result back. Shared-nothing across
+keys — the distributed analogue of the reference's single-threaded
+per-series loop. The ACD fit/likelihood/covariance, HAC, EL and
+residual operators in ``stats/`` and the pipeline's seeded EWMA use the
+same boundary.
 
 Numerical semantics are pinned bit-for-bit to the reference:
 
@@ -34,7 +37,7 @@ parity.
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Callable, Iterable
 
 import numpy as np
 import pandas as pd
@@ -203,6 +206,37 @@ def forecast_np(
 # Spark-level operators
 # ---------------------------------------------------------------------------
 
+def per_key(
+    df: DataFrame,
+    keys: list[str],
+    order_col: str,
+    cols: list[str],
+    fields: list[T.StructField],
+    fn: Callable[[pd.DataFrame], dict],
+) -> DataFrame:
+    """Run ``fn`` once per key on that key's series, oldest first.
+
+    Shuffles ``(keys..., order_col, cols...)`` by ``keys`` into one
+    ``applyInPandas`` group per key and sorts each group by
+    ``order_col`` with a stable mergesort: Spark does not order a
+    group, and the reference's series run oldest→newest
+    (src/duration/mod.rs:47-49). ``fn`` gets the sorted group (index
+    0..n−1) and returns a dict of equal-length output columns — one
+    row for a summary, n for a path, ``horizon`` for a forecast. The
+    output rows are ``(keys..., fields...)``, with the key values
+    echoed from the group and the key fields taken from ``df.schema``.
+    """
+    out_schema = T.StructType([*(df.schema[k] for k in keys), *fields])
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(order_col, kind="mergesort", ignore_index=True)
+        out = fn(pdf)
+        n = len(next(iter(out.values())))
+        return pd.DataFrame({**{k: pdf[k].to_numpy()[:1].repeat(n) for k in keys}, **out})
+
+    return df.select(*keys, order_col, *cols).groupBy(*keys).applyInPandas(kernel, out_schema)
+
+
 def acd_psi(
     df: DataFrame,
     keys: list[str],
@@ -217,42 +251,24 @@ def acd_psi(
     duration_lags: Iterable[float] | None = None,
     guards: tuple[float, float] = DEFAULT_PSI_GUARDS,
 ) -> DataFrame:
-    """Per-key ψ path: (keys..., order_col, value_col, psi).
-
-    One ``applyInPandas`` group per key; rows are sorted by ``order_col``
-    inside the kernel (Spark does not guarantee group order), mirroring
-    the reference's oldest→newest convention (src/duration/mod.rs:47-49).
-    """
+    """Per-key ψ path: (keys..., order_col, value_col, psi)."""
     alpha_a = np.asarray(list(alpha), dtype=np.float64)
     beta_a = np.asarray(list(beta), dtype=np.float64)
     p, q = len(beta_a), len(alpha_a)
     psi_l = np.asarray(list(psi_lags), dtype=np.float64) if psi_lags is not None else None
     dur_l = np.asarray(list(duration_lags), dtype=np.float64) if duration_lags is not None else None
 
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [
-            *key_fields,
-            df.schema[order_col],
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("psi", T.DoubleType()),
-        ]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def path(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
         pi, di = seed_init(
             init, omega, alpha_a, beta_a, float(np.mean(x)), p, q,
             fixed_value=fixed_value, psi_lags=psi_l, duration_lags=dur_l,
         )
         psi = psi_recursion_np(x, omega, alpha_a, beta_a, pi, di, guards)
-        out = pdf[[*keys, order_col]].copy()
-        out[value_col] = x
-        out["psi"] = psi
-        return out
+        return {order_col: pdf[order_col], value_col: x, "psi": psi}
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kernel, out_schema)
+    fields = [df.schema[order_col], *(T.StructField(c, T.DoubleType()) for c in (value_col, "psi"))]
+    return per_key(df, keys, order_col, [value_col], fields, path)
 
 
 def ewma(
@@ -296,13 +312,7 @@ def acd_forecast(
     beta_a = np.asarray(list(beta), dtype=np.float64)
     p, q = len(beta_a), len(alpha_a)
 
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [*key_fields, T.StructField("h", T.IntegerType()), T.StructField("psi_hat", T.DoubleType())]
-    )
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def forecast(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
         pi, di = seed_init(init, omega, alpha_a, beta_a, float(np.mean(x)), p, q, fixed_value=fixed_value)
         psi = psi_recursion_np(x, omega, alpha_a, beta_a, pi, di, guards)
@@ -310,12 +320,10 @@ def acd_forecast(
         psi_tail = psi[len(psi) - p :] if p > 0 else np.empty(0)
         dur_tail = x[len(x) - q :] if q > 0 else np.empty(0)
         fc = forecast_np(omega, alpha_a, beta_a, psi_tail, dur_tail, horizon, guards)
-        out = pd.DataFrame({k: [pdf[k].iloc[0]] * horizon for k in keys})
-        out["h"] = np.arange(1, horizon + 1, dtype=np.int32)
-        out["psi_hat"] = fc
-        return out
+        return {"h": np.arange(1, horizon + 1, dtype=np.int32), "psi_hat": fc}
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kernel, out_schema)
+    fields = [T.StructField("h", T.IntegerType()), T.StructField("psi_hat", T.DoubleType())]
+    return per_key(df, keys, order_col, [value_col], fields, forecast)
 
 
 # ---------------------------------------------------------------------------
@@ -537,39 +545,18 @@ def holt_linear(
     order_col: str = "t",
 ) -> DataFrame:
     """Per-key Holt linear smoothing: (keys..., order_col, value_col,
-    level, trend, forecast). Same execution shape as ``acd_psi`` — one
-    ``applyInPandas`` kernel per key, rows sorted inside the kernel
-    (mergesort, the engine's ordering convention); at giant-key scale
-    the affine-segment escape hatch applies identically (the Holt
-    update is affine in (ℓ, b), composable exactly like
+    level, trend, forecast), through ``per_key`` like ``acd_psi``; at
+    giant-key scale the affine-segment escape hatch applies identically
+    (the Holt update is affine in (ℓ, b), composable exactly like
     ``ewma_affine_segments``)."""
     if not (0.0 < alpha <= 1.0) or not (0.0 <= beta <= 1.0):
         raise ValueError(f"need 0<alpha<=1, 0<=beta<=1, got {alpha}, {beta}")
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [
-            *key_fields,
-            df.schema[order_col],
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("level", T.DoubleType()),
-            T.StructField("trend", T.DoubleType()),
-            T.StructField("forecast", T.DoubleType()),
-        ]
-    )
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def path(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
         lvl, trd, fc = holt_linear_np(x, alpha, beta)
-        out = pdf[[*keys, order_col]].copy()
-        out[value_col] = x
-        out["level"] = lvl
-        out["trend"] = trd
-        out["forecast"] = fc
-        return out
+        return {order_col: pdf[order_col], value_col: x, "level": lvl, "trend": trd, "forecast": fc}
 
-    return (
-        df.select(*keys, order_col, value_col)
-        .groupBy(*keys)
-        .applyInPandas(kernel, out_schema)
-    )
+    doubles = (value_col, "level", "trend", "forecast")
+    fields = [df.schema[order_col], *(T.StructField(c, T.DoubleType()) for c in doubles)]
+    return per_key(df, keys, order_col, [value_col], fields, path)

@@ -114,34 +114,18 @@ class MetaStore:
         self._schemas[name] = df.schema
 
     def _read(self, name: str, schema: T.StructType) -> DataFrame:
-        # only a MISSING table means "not created yet" — any other read
-        # failure (corrupt footer, permissions, transient FS error) must
-        # propagate: silently returning an empty frame here would reset
-        # every watermark and reseed the recursions with wrong values
-        # (review r4)
-        from pyspark.errors import AnalysisException
-
-        try:
-            return read_recorded(self.spark, f"{self.base}/{name}", self._schemas, name)
-        except AnalysisException as e:
-            # structured error class first (stable across Spark message
-            # rewording — ADVICE r4), message substrings as fallback for
-            # builds that predate error classes on this path
-            cond = None
-            for attr in ("getCondition", "getErrorClass"):
-                fn = getattr(e, attr, None)
-                if callable(fn):
-                    try:
-                        cond = fn()
-                        break
-                    except Exception:
-                        cond = None
-            if (cond and "PATH_NOT_FOUND" in cond) or (
-                cond is None
-                and ("PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e))
-            ):
-                return self.spark.createDataFrame([], schema)
-            raise
+        # only a MISSING table means "not created yet"; it is checked on
+        # the local path (the assumption restore_dir/swap_dir make), so
+        # the expected miss never becomes a failed Spark read that the
+        # query listeners log. Any other read failure (corrupt footer,
+        # permissions, transient FS error) propagates: an empty frame
+        # there would reset every watermark and reseed the recursions
+        # with wrong values
+        path = f"{self.base}/{name}"
+        restore_dir(path)
+        if not os.path.exists(path):
+            return self.spark.createDataFrame([], schema)
+        return read_recorded(self.spark, path, self._schemas, name)
 
     # -- lineage -------------------------------------------------------------
 

@@ -17,6 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import recursion
 from .checkpoint import MetaStore
@@ -139,22 +140,9 @@ class RollupPipeline:
             F.col("last_bucket_ts").isNull() | (F.col("t") > F.col("last_bucket_ts"))
         )
 
-        keys = self.keys
         alpha = self.ewma_alpha
-        from pyspark.sql import types as T
 
-        key_fields = [series.schema[k] for k in keys]
-        out_schema = T.StructType(
-            [
-                *key_fields,
-                series.schema["t"],
-                T.StructField("v", T.DoubleType()),
-                T.StructField("psi", T.DoubleType()),
-            ]
-        )
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("t", kind="mergesort")
+        def path(pdf: pd.DataFrame) -> dict:
             x = pdf["v"].to_numpy(dtype=np.float64)
             psi_lags = pdf["psi_lags"].iloc[0]
             dur_lags = pdf["dur_lags"].iloc[0]
@@ -169,9 +157,7 @@ class RollupPipeline:
                 x, 0.0, np.array([alpha]), np.array([1 - alpha]), pi, di,
                 guards=(float("-inf"), float("inf")),
             )
-            out = pdf[[*keys, "t"]].copy()
-            out["v"] = x
-            out["psi"] = psi
-            return out
+            return {"t": pdf["t"], "v": x, "psi": psi}
 
-        return fresh.groupBy(*keys).applyInPandas(kernel, out_schema)
+        fields = [fresh.schema["t"], T.StructField("v", T.DoubleType()), T.StructField("psi", T.DoubleType())]
+        return recursion.per_key(fresh, self.keys, "t", ["v", "psi_lags", "dur_lags"], fields, path)

@@ -1,8 +1,10 @@
 """ACD(p, q) duration models: MLE fit, forecast, covariance — per key.
 
 The reference's three ``ACD`` entry points (src/lib.rs:441-454, 466-473,
-491-505) re-expressed as grouped Spark kernels. Math is pinned to the
-cited reference code:
+491-505) re-expressed as per-key Spark kernels through the one series
+boundary, ``operators.recursion.per_key`` (which owns the shuffle, the
+oldest-first sort and the key echo); a key whose fit fails is an error
+row. Math is pinned to the cited reference code:
 
 * likelihood: ψ recursion (operators/recursion.py ≡ psi.rs:576-604) +
   ordered sum of per-obs logpdf over ``data[t0..]`` ⨯ ``ψ[t0..]``
@@ -30,7 +32,7 @@ from pyspark.sql import types as T
 
 from ..constants import DEFAULT_PSI_GUARDS, STATIONARITY_MARGIN
 from ..functions import scalar as S
-from ..operators.recursion import psi_recursion_np, seed_init
+from ..operators.recursion import per_key, psi_recursion_np, seed_init
 from .. import validation as V
 from .hac import hac_covariance_np
 from .optim import lbfgs_minimize
@@ -417,33 +419,27 @@ def acd_fit(
     rows, not job failures."""
     dim = 1 + spec.q + spec.p
     theta0_a = np.zeros(dim) if theta0 is None else np.asarray(theta0, dtype=np.float64)
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [
-            *key_fields,
-            T.StructField("omega", T.DoubleType()),
-            T.StructField("alpha", T.ArrayType(T.DoubleType())),
-            T.StructField("beta", T.ArrayType(T.DoubleType())),
-            T.StructField("slack", T.DoubleType()),
-            T.StructField("psi_lags", T.ArrayType(T.DoubleType())),
-            T.StructField("loglik", T.DoubleType()),
-            T.StructField("iterations", T.IntegerType()),
-            T.StructField("fn_evals", T.IntegerType()),
-            T.StructField("grad_norm", T.DoubleType()),
-            T.StructField("converged", T.BooleanType()),
-            T.StructField("term_status", T.StringType()),
-            T.StructField("unit", T.StringType()),
-            T.StructField("diurnal_adjusted", T.BooleanType()),
-            T.StructField("error", T.StringType()),
-        ]
-    )
+    fields = [
+        T.StructField("omega", T.DoubleType()),
+        T.StructField("alpha", T.ArrayType(T.DoubleType())),
+        T.StructField("beta", T.ArrayType(T.DoubleType())),
+        T.StructField("slack", T.DoubleType()),
+        T.StructField("psi_lags", T.ArrayType(T.DoubleType())),
+        T.StructField("loglik", T.DoubleType()),
+        T.StructField("iterations", T.IntegerType()),
+        T.StructField("fn_evals", T.IntegerType()),
+        T.StructField("grad_norm", T.DoubleType()),
+        T.StructField("converged", T.BooleanType()),
+        T.StructField("term_status", T.StringType()),
+        T.StructField("unit", T.StringType()),
+        T.StructField("diurnal_adjusted", T.BooleanType()),
+        T.StructField("error", T.StringType()),
+    ]
     unit = V.parse_unit(spec.unit)
 
-    def kfn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def fit(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row.update(unit=[unit], diurnal_adjusted=[spec.diurnal_adjusted])
+        row = {"unit": [unit], "diurnal_adjusted": [spec.diurnal_adjusted]}
         try:
             r = fit_series(x, theta0_a, spec)
             row.update(
@@ -460,9 +456,9 @@ def acd_fit(
                 converged=[False], term_status=[None],
                 error=[f"{type(e).__name__}: {e}"],
             )
-        return pd.DataFrame(row)
+        return row
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kfn, out_schema)
+    return per_key(df, keys, order_col, [value_col], fields, fit)
 
 
 def loglik_at_params(
@@ -506,17 +502,12 @@ def acd_loglik_fixed(
     """Per-key ℓ at fixed parameters → one row per key. SQL-expressible
     (RECURSIVE CTE over the ψ recursion) — the oracle-able companion of
     ``acd_fit``."""
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType([*key_fields, T.StructField("loglik", T.DoubleType())])
-
-    def kfn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def loglik_row(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row["loglik"] = [loglik_at_params(x, omega, alpha, beta, spec)]
-        return pd.DataFrame(row)
+        return {"loglik": [loglik_at_params(x, omega, alpha, beta, spec)]}
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kfn, out_schema)
+    fields = [T.StructField("loglik", T.DoubleType())]
+    return per_key(df, keys, order_col, [value_col], fields, loglik_row)
 
 
 def acd_covariance(
@@ -535,28 +526,21 @@ def acd_covariance(
     """Fit + parameter covariance per key (flattened row-major)."""
     dim = 1 + spec.q + spec.p
     theta0_a = np.zeros(dim) if theta0 is None else np.asarray(theta0, dtype=np.float64)
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [
-            *key_fields,
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("cov", T.ArrayType(T.DoubleType())),
-            T.StructField("error", T.StringType()),
-        ]
-    )
+    fields = [
+        T.StructField("dim", T.IntegerType()),
+        T.StructField("cov", T.ArrayType(T.DoubleType())),
+        T.StructField("error", T.StringType()),
+    ]
 
-    def kfn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def cov_row(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
         try:
             r = fit_series(x, theta0_a, spec)
             cov = covariance_series(
                 x, r["theta_hat"], spec, robust, kernel, bandwidth, center, small_sample_correction
             )
-            row.update(dim=[dim], cov=[cov.reshape(-1).tolist()], error=[None])
+            return {"dim": [dim], "cov": [cov.reshape(-1).tolist()], "error": [None]}
         except Exception as e:  # noqa: BLE001
-            row.update(dim=[dim], cov=[None], error=[f"{type(e).__name__}: {e}"])
-        return pd.DataFrame(row)
+            return {"dim": [dim], "cov": [None], "error": [f"{type(e).__name__}: {e}"]}
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kfn, out_schema)
+    return per_key(df, keys, order_col, [value_col], fields, cov_row)

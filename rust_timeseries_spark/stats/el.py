@@ -2,8 +2,9 @@
 
 Numpy kernel replicating the reference exactly
 (src/statistical_tests/escanciano_lobato.rs:214-227 and helpers), plus a
-Spark grouped operator: one test per key via ``applyInPandas``. The lag
-pairing, 1/(n−j) denominators, BIC/AIC penalty switch, and
+Spark grouped operator: one test per key through the per-key boundary
+(``operators.recursion.per_key``); a series the test rejects is an error
+row. The lag pairing, 1/(n−j) denominators, BIC/AIC penalty switch, and
 smallest-argmax tie-breaking all follow the cited lines.
 """
 
@@ -17,6 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.scalar import chi2_sf1
+from ..operators.recursion import per_key
 
 DEFAULT_Q = 2.4
 
@@ -95,29 +97,20 @@ def escanciano_lobato(
 
     Failed keys (too-short series, zero τ) surface as error rows rather
     than failing the job (SURVEY.md §4.1 error-as-value)."""
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [
-            *key_fields,
-            T.StructField("p_tilde", T.IntegerType()),
-            T.StructField("stat", T.DoubleType()),
-            T.StructField("p_value", T.DoubleType()),
-            T.StructField("error", T.StringType()),
-        ]
-    )
+    fields = [
+        T.StructField("p_tilde", T.IntegerType()),
+        T.StructField("stat", T.DoubleType()),
+        T.StructField("p_value", T.DoubleType()),
+        T.StructField("error", T.StringType()),
+    ]
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def test_row(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
         try:
             out = escanciano_lobato_np(x, q, d)
-            row.update(
-                p_tilde=[out["p_tilde"]], stat=[out["stat"]],
-                p_value=[out["p_value"]], error=[None],
-            )
+            return {"p_tilde": [out["p_tilde"]], "stat": [out["stat"]],
+                    "p_value": [out["p_value"]], "error": [None]}
         except ValueError as e:
-            row.update(p_tilde=[None], stat=[None], p_value=[None], error=[str(e)])
-        return pd.DataFrame(row)
+            return {"p_tilde": [None], "stat": [None], "p_value": [None], "error": [str(e)]}
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kernel, out_schema)
+    return per_key(df, keys, order_col, [value_col], fields, test_row)

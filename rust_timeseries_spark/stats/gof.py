@@ -18,9 +18,10 @@ Escanciano–Lobato test (stats/el.py):
   dispersion direction).
 
 Residual computation reuses the engine's ψ recursion kernel
-(operators/recursion.py ≡ reference psi.rs:576-604); the diagnostics
-themselves are pure JVM column expressions — one window per lag, one
-aggregate per key, no Python in the hot path.
+(operators/recursion.py ≡ reference psi.rs:576-604) through the per-key
+boundary (``per_key``); the diagnostics themselves are pure JVM column
+expressions — one window per lag, one aggregate per key, no Python in
+the hot path.
 """
 
 from __future__ import annotations
@@ -33,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.recursion import per_key, psi_recursion_np, seed_init
 from .acd import AcdSpec
 
 
@@ -53,20 +55,13 @@ def acd_residuals(
     ``init_value`` — review r4: residuals for a model fit with
     ``init='fixed'``/``'sample_mean'`` must seed the same way the fit
     did, or the diagnostics run on the wrong ψ path)."""
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [*key_fields, df.schema[order_col], T.StructField("eps", T.DoubleType())]
-    )
     om, al, be = float(omega), list(map(float, alpha)), list(map(float, beta))
 
-    def kfn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def residuals(pdf: pd.DataFrame) -> dict:
         x = pdf[value_col].to_numpy(dtype=np.float64)
         # ψ at the EXACT fixed params, not a θ round-trip: build ψ with
         # the recursion kernel directly (same op order as the reference),
         # seeded by the spec's init policy (seed_init ≡ psi.rs:403-427)
-        from ..operators.recursion import psi_recursion_np, seed_init
-
         al_a, be_a = np.asarray(al), np.asarray(be)
         pi, di = seed_init(
             spec.init, om, al_a, be_a, float(x.mean()), len(be), len(al),
@@ -74,11 +69,10 @@ def acd_residuals(
         )
         psi = psi_recursion_np(x, om, al_a, be_a, pi, di, guards=spec.psi_guards)
         t0 = spec.t0 or 0
-        out = pdf[[*keys, order_col]].iloc[t0:].copy()
-        out["eps"] = (x / psi)[t0:]
-        return out
+        return {order_col: pdf[order_col].to_numpy()[t0:], "eps": (x / psi)[t0:]}
 
-    return df.select(*keys, order_col, value_col).groupBy(*keys).applyInPandas(kfn, out_schema)
+    fields = [df.schema[order_col], T.StructField("eps", T.DoubleType())]
+    return per_key(df, keys, order_col, [value_col], fields, residuals)
 
 
 def ljung_box_np(eps, m: int = 4) -> dict:

@@ -8,8 +8,10 @@ S = Γ₀ + Σ_{k=1..L} w_k (Γ_k + Γ_kᵀ) with w_k = kernel(k/(L+1)),
 correction) or 1/n.
 
 Spark operator: scores live as an ``array<double>`` column; one HAC
-matrix per key via ``applyInPandas`` (matrices are k×k with k = 1+p+q —
-tiny; the distributed dimension is the key fan-out).
+matrix per key through the per-key boundary
+(``operators.recursion.per_key``); the matrices are k×k with
+k = 1+p+q — tiny; the distributed dimension is the key fan-out. A
+negative bandwidth raises: there is no per-key error row here.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..functions.scalar import kernel_weight, optimal_bandwidth
+from ..operators.recursion import per_key
 
 KERNEL_ALIASES = {
     "newey_west": "bartlett",
@@ -81,22 +84,17 @@ def hac_covariance(
     small_sample_correction: bool = True,
 ) -> DataFrame:
     """Per-key HAC matrix: (keys..., dim, cov flattened row-major)."""
-    key_fields = [df.schema[k] for k in keys]
-    out_schema = T.StructType(
-        [
-            *key_fields,
-            T.StructField("dim", T.IntegerType()),
-            T.StructField("bandwidth_used", T.IntegerType()),
-            T.StructField("cov", T.ArrayType(T.DoubleType())),
-        ]
-    )
+    fields = [
+        T.StructField("dim", T.IntegerType()),
+        T.StructField("bandwidth_used", T.IntegerType()),
+        T.StructField("cov", T.ArrayType(T.DoubleType())),
+    ]
     kernel_n = normalize_kernel(kernel)
 
     if bandwidth is not None and int(bandwidth) < 0:
         raise ValueError(f"bandwidth must be >= 0, got {bandwidth}")
 
-    def kernel_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="mergesort")
+    def hac_row(pdf: pd.DataFrame) -> dict:
         mat = np.stack(pdf[score_col].to_numpy())
         n = mat.shape[0]
         if bandwidth is not None:
@@ -105,13 +103,6 @@ def hac_covariance(
             centered = mat - mat.mean(axis=0) if center else mat
             bw = min(optimal_bandwidth(kernel_n, centered), n - 1)
         cov = hac_covariance_np(mat, kernel_n, bw, center, small_sample_correction)
-        return pd.DataFrame(
-            {
-                **{k: [pdf[k].iloc[0]] for k in keys},
-                "dim": [mat.shape[1]],
-                "bandwidth_used": [bw],
-                "cov": [cov.reshape(-1).tolist()],
-            }
-        )
+        return {"dim": [mat.shape[1]], "bandwidth_used": [bw], "cov": [cov.reshape(-1).tolist()]}
 
-    return df.select(*keys, order_col, score_col).groupBy(*keys).applyInPandas(kernel_fn, out_schema)
+    return per_key(df, keys, order_col, [score_col], fields, hac_row)

@@ -151,42 +151,6 @@ def test_compress_tier_arrow_identical(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_vectorized_encoders_byte_identical():
-    rng = np.random.default_rng(123)
-    int_cases = [
-        np.arange(2000, dtype=np.int64) * 60,
-        rng.integers(-(2**62), 2**62, 777),
-        np.full(100, 42, dtype=np.int64),
-        np.array([], dtype=np.int64),
-        np.array([1], dtype=np.int64),
-        np.array([1, -1], dtype=np.int64),
-        np.array([I64.min, I64.max, 0, -1], dtype=np.int64),
-    ]
-    for arr in int_cases:
-        assert C.encode_dod_int64_vec(arr) == C.encode_dod_int64(arr)
-    f_cases = [
-        rng.normal(size=1500),
-        np.full(300, 2.5),
-        np.array([0.0, -0.0, np.inf, -np.inf, np.nan, 5e-324, 1e308]),
-        np.array([]),
-        np.array([7.0]),
-    ]
-    for arr in f_cases:
-        a = np.asarray(arr, dtype=np.float64)
-        assert C.encode_gorilla_f64_vec(a) == C.encode_gorilla_f64(a)
-
-
-def test_clz_ctz_vectorized():
-    xs = np.array([0, 1, 2, 3, 2**63, 2**63 + 1, (1 << 64) - 1, 1 << 40], dtype=np.uint64)
-    lead = C._clz64(xs)
-    trail = C._ctz64(xs)
-    for i, x in enumerate(int(v) for v in xs):
-        exp_lead = 64 - x.bit_length()
-        assert lead[i] == exp_lead, (x, lead[i], exp_lead)
-        if x:
-            assert trail[i] == (x & -x).bit_length() - 1
-
-
 # --- native (compiled C) backend ----------------------------------------------
 # byte/bit equivalence of the on-demand-compiled kernels vs the pure-
 # Python reference paths. Skipped only where no C compiler exists.

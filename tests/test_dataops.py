@@ -1314,6 +1314,32 @@ def test_heavy_hitters_exact_matches_groupby(spark):
     assert all(r["guaranteed"] for r in got)  # 1200 > 34700/65
 
 
+def test_heavy_hitters_recount_join_not_forced_broadcast(spark):
+    # The candidate set is bounded only by k_counters x partitions, so
+    # the recount semi-join must not force a broadcast: with AQE
+    # auto-broadcast disabled no BroadcastExchange may remain, and the
+    # result must still equal the groupBy recount.
+    import pyspark.sql.functions as F
+    from rust_timeseries_spark.operators import heavyhitters as hh
+
+    rng = np.random.default_rng(19)
+    vals = [f"n{int(i)}" for i in rng.integers(0, 500, size=4000)]
+    vals += ["A"] * 400 + ["B"] * 300 + ["C"] * 250
+    df = spark.createDataFrame([(v,) for v in vals], ["w"]).repartition(4)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        out = hh.heavy_hitters_exact(df, "w", top_n=3, k_counters=32)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" not in plan, plan
+        got = out.collect()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    exact = df.groupBy("w").count().orderBy(F.desc("count"), F.asc("w")).limit(3).collect()
+    assert [(r["value"], r["n"]) for r in got] == [(r["w"], r["count"]) for r in exact]
+    assert all(r["guaranteed"] for r in got)  # 250 > 4950/33
+
+
 def test_heavy_hitters_validation():
     from rust_timeseries_spark.operators import heavyhitters as hh
 

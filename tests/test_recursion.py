@@ -1,4 +1,5 @@
 import numpy as np
+import pytest
 
 from rust_timeseries_spark import datagen
 from rust_timeseries_spark.operators import recursion as rec
@@ -200,3 +201,167 @@ def test_holt_validation():
 
     with _pytest.raises(ValueError, match="alpha"):
         rec.holt_linear(None, ["k"], alpha=0.0)
+
+
+# --- the per-key boundary (recursion.per_key) ---------------------------------
+# Every operator behind per_key must equal its numpy kernel run on the
+# key's series sorted by t, bit for bit, whatever the row order and
+# partitioning, and echo string and int keys. Series are keyed twice:
+# by (ks, ki), where ki alone repeats across ks, and by the int kid.
+
+_SERIES = {("a", 0, 0): 60, ("b", 0, 1): 45, ("a", 1, 2): 70, ("c", 7, 3): 1}
+
+
+@pytest.fixture(scope="module")
+def shuffled_series(spark):
+    rng = np.random.default_rng(2024)
+    data, rows = {}, []
+    for (ks, ki, kid), n in _SERIES.items():
+        t = np.sort(rng.choice(10_000, n, replace=False)).astype(np.int64)
+        # the one-row key holds a zero duration: one observation alone
+        # fits (as in the reference), a non-positive one is an error row
+        x = rng.exponential(1.0, n) + 0.05 if n > 1 else np.zeros(1)
+        s = np.stack([x - 1.0, (x - 1.0) ** 2], axis=1)
+        data[kid] = (t, x, s)
+        rows += [(ks, ki, kid, int(a), float(b), [float(u) for u in c]) for a, b, c in zip(t, x, s)]
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    df = spark.createDataFrame(rows, "ks string, ki int, kid long, t long, v double, s array<double>")
+    return df.repartition(3), data
+
+
+def _spec(**kw):
+    from rust_timeseries_spark.stats.acd import AcdSpec
+
+    return AcdSpec(p=1, q=1, **kw)
+
+
+def _psi(x, omega=0.2, alpha=(0.2,), beta=(0.3,), init="uncond_mean", **guards):
+    a, b = np.array(alpha), np.array(beta)
+    pi, di = rec.seed_init(init, omega, a, b, float(np.mean(x)), len(b), len(a))
+    return rec.psi_recursion_np(x, omega, a, b, pi, di, **guards)
+
+
+def _exp_fit(t, x, s):
+    from rust_timeseries_spark.stats import acd
+
+    try:
+        r = acd.fit_series(x, np.zeros(3), _spec())
+    except Exception as e:  # noqa: BLE001
+        return [{"omega": None, "loglik": None, "converged": False, "error": f"{type(e).__name__}: {e}"}]
+    return [{"omega": r["omega"], "alpha": r["alpha"], "beta": r["beta"], "slack": r["slack"],
+             "psi_lags": r["psi_lags"], "loglik": r["loglik"], "iterations": r["iterations"],
+             "fn_evals": r["fn_evals"], "grad_norm": r["grad_norm"], "converged": r["converged"],
+             "term_status": r["term_status"], "error": None}]
+
+
+def _exp_cov(t, x, s):
+    from rust_timeseries_spark.stats import acd
+
+    try:
+        theta = acd.fit_series(x, np.zeros(3), _spec())["theta_hat"]
+        return [{"dim": 3, "cov": acd.covariance_series(x, theta, _spec()).reshape(-1), "error": None}]
+    except Exception as e:  # noqa: BLE001
+        return [{"dim": 3, "cov": None, "error": f"{type(e).__name__}: {e}"}]
+
+
+def _exp_hac(t, x, s):
+    from rust_timeseries_spark.functions.scalar import optimal_bandwidth
+    from rust_timeseries_spark.stats.hac import hac_covariance_np
+
+    return [{"dim": 2, "bandwidth_used": min(optimal_bandwidth("bartlett", s), len(s) - 1),
+             "cov": hac_covariance_np(s).reshape(-1)}]
+
+
+def _exp_el(t, x, s):
+    from rust_timeseries_spark.stats.el import escanciano_lobato_np
+
+    try:
+        r = escanciano_lobato_np(x)
+    except ValueError as e:
+        return [{"p_tilde": None, "stat": None, "p_value": None, "error": str(e)}]
+    return [{"p_tilde": r["p_tilde"], "stat": r["stat"], "p_value": r["p_value"], "error": None}]
+
+
+def _exp_loglik(t, x, s):
+    from rust_timeseries_spark.stats.acd import loglik_at_params
+
+    return [{"loglik": loglik_at_params(x, 0.2, [0.2], [0.3], _spec())}]
+
+
+def _path(t, **cols):
+    return [{"t": a, **{c: v[i] for c, v in cols.items()}} for i, a in enumerate(t)]
+
+
+def _exp_ewma(t, x, s):
+    psi = _psi(x, 0.0, (0.3,), (0.7,), "sample_mean", guards=(-np.inf, np.inf))
+    return _path(t, v=x, psi=psi)
+
+
+def _exp_resid(t, x, s):
+    return _path(t, eps=x / _psi(x))[2:]
+
+
+def _exp_forecast(t, x, s):
+    a, b = np.array([0.2]), np.array([0.3])
+    fc = rec.forecast_np(0.2, a, b, _psi(x)[-1:], x[-1:], 8)
+    return [{"h": h + 1, "psi_hat": v} for h, v in enumerate(fc)]
+
+
+def _exp_holt(t, x, s):
+    lvl, trd, fc = rec.holt_linear_np(x, 0.3, 0.2)
+    return _path(t, v=x, level=lvl, trend=trd, forecast=fc)
+
+
+def _ops():
+    from rust_timeseries_spark.stats import acd, el, gof, hac
+
+    return {
+        "acd_fit": (lambda df, k: acd.acd_fit(df, k, _spec()), _exp_fit),
+        "acd_loglik_fixed": (lambda df, k: acd.acd_loglik_fixed(df, k, _spec(), 0.2, [0.2], [0.3]), _exp_loglik),
+        "acd_covariance": (lambda df, k: acd.acd_covariance(df, k, _spec()), _exp_cov),
+        "hac_covariance": (lambda df, k: hac.hac_covariance(df, k, "s"), _exp_hac),
+        "escanciano_lobato": (lambda df, k: el.escanciano_lobato(df, k), _exp_el),
+        "acd_residuals": (lambda df, k: gof.acd_residuals(df, k, _spec(t0=2), 0.2, [0.2], [0.3]), _exp_resid),
+        "acd_psi": (lambda df, k: rec.acd_psi(df, k, 0.2, [0.2], [0.3]),
+                    lambda t, x, s: _path(t, v=x, psi=_psi(x))),
+        "ewma": (lambda df, k: rec.ewma(df, k, 0.3), _exp_ewma),
+        "acd_forecast": (lambda df, k: rec.acd_forecast(df, k, 0.2, [0.2], [0.3], 8), _exp_forecast),
+        "holt_linear": (lambda df, k: rec.holt_linear(df, k), _exp_holt),
+    }
+
+
+def _bits(v):
+    """Comparable form with floats as their exact hex; NaN is None, as a
+    pandas NaN comes back from Spark as null."""
+    if isinstance(v, np.generic):
+        v = v.item()
+    if isinstance(v, float):
+        return None if v != v else v.hex()
+    if isinstance(v, (list, tuple, np.ndarray)):
+        return [_bits(u) for u in v]
+    return v
+
+
+@pytest.mark.parametrize("keying", ["str_int", "int"])
+@pytest.mark.parametrize("op", list(_ops()))
+def test_per_key_operators_equal_numpy_kernels(spark, shuffled_series, op, keying):
+    df, data = shuffled_series
+    keys = ["ks", "ki"] if keying == "str_int" else ["kid"]
+    run, expect = _ops()[op]
+    out = run(df, keys)
+    assert out.columns[: len(keys)] == keys
+    got = {}
+    for r in out.collect():
+        got.setdefault(tuple(r[k] for k in keys), []).append(r.asDict())
+    kid_of = {(ks, ki) if keying == "str_int" else (kid,): kid for ks, ki, kid in _SERIES}
+    want = {key: expect(*data[kid]) for key, kid in kid_of.items()}
+    assert set(got) == {key for key, exp in want.items() if exp}
+    for key, exp in want.items():
+        rows = sorted(got.get(key, []), key=lambda r: r.get("t", r.get("h", 0)))
+        assert len(rows) == len(exp), (op, key)
+        for g, e in zip(rows, exp):
+            assert {c: _bits(g[c]) for c in e} == {c: _bits(v) for c, v in e.items()}, (op, key)
+    # the one-row key is an error row, not a failed job
+    if op in ("acd_fit", "escanciano_lobato"):
+        one = got[("c", 7) if keying == "str_int" else (3,)][0]
+        assert one["error"] is not None and one["p_tilde" if op != "acd_fit" else "omega"] is None

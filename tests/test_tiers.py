@@ -524,6 +524,31 @@ def test_meta_appends_with_arrow_disabled(spark, tmp_path):
     assert meta.lineage().schema == MetaStore(spark, str(tmp_path / "p")).lineage().schema
 
 
+def test_meta_missing_table_is_empty_without_a_read_and_corrupt_raises(spark, tmp_path, monkeypatch):
+    # a table not written yet is an empty typed frame, decided on the
+    # path without a Spark read (a failed read is logged by the query
+    # listeners); a table that exists but cannot be read still raises
+    from rust_timeseries_spark.plans import checkpoint
+    from rust_timeseries_spark.plans.checkpoint import MetaStore
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("read_recorded called for a missing table")
+
+    meta = MetaStore(spark, str(tmp_path / "p"))
+    with monkeypatch.context() as m:
+        m.setattr(checkpoint, "read_recorded", no_read)
+        wm = meta.watermarks(["source"])
+        lin = meta.lineage()
+    assert wm.schema == meta.watermark_schema(["source"]) and wm.count() == 0
+    assert lin.schema == checkpoint.LINEAGE_SCHEMA and lin.count() == 0
+
+    bad = tmp_path / "p" / "_meta" / "lineage"
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        MetaStore(spark, str(tmp_path / "p")).lineage().collect()
+
+
 def test_timestamp_store_reads_through_recorded_schema(spark, raw, tmp_path):
     # an epoch=False store partitions by a TIMESTAMP bucket_day; the
     # recorded schema keeps that type on read, so merge (whose 1d rebuild

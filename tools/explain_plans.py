@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import io
 import os
+import shutil
 import sys
 from contextlib import redirect_stdout
 
@@ -490,25 +491,53 @@ def main() -> None:
                    and "BroadcastExchange" in plan
                    and "CartesianProduct" not in plan, plan))
 
-    # 40. Holt smoothing: one hash Exchange into the per-key kernel
-    # (the same applyInPandas shape as acd_psi/ewma)
+    # 40. per-key series kernels: every operator behind
+    # recursion.per_key is ONE FlatMapGroupsInPandas fed by at most the
+    # series' own Exchange plus the key shuffle — a change to the shared
+    # boundary that adds a shuffle fails here for all of them
+    import tempfile
+
     from rust_timeseries_spark.operators import recursion as recursion_ops
+    from rust_timeseries_spark.plans.pipeline import RollupPipeline
+    from rust_timeseries_spark.stats import acd as acd_stats, el as el_stats, gof as gof_stats
+    from rust_timeseries_spark.stats import hac as hac_stats
 
     series = t1h.selectExpr("event_type as key", "bucket_ts as t",
                             "cast(tok_sum as double) as v")
-    plan = explain_str(recursion_ops.holt_linear(series, ["key"]))
-    checks.append(("holt: one Exchange into FlatMapGroupsInPandas",
-                   "FlatMapGroupsInPandas" in plan
-                   and len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 2, plan))
+    spec = acd_stats.AcdSpec(p=1, q=1)
+    wm_dir = tempfile.mkdtemp(prefix="plan-audit-")
+    pipe = RollupPipeline(spark, wm_dir, keys=["event_type"])
+    pipe._advance_ewma_watermarks(t1h)
+    per_key_plans = {
+        "acd_fit": acd_stats.acd_fit(series, ["key"], spec),
+        "acd_loglik_fixed": acd_stats.acd_loglik_fixed(series, ["key"], spec, 0.2, [0.2], [0.3]),
+        "acd_covariance": acd_stats.acd_covariance(series, ["key"], spec),
+        "hac_covariance": hac_stats.hac_covariance(
+            series.withColumn("s", F.array("v", "v")), ["key"], "s"),
+        "escanciano_lobato": el_stats.escanciano_lobato(series, ["key"]),
+        "acd_residuals": gof_stats.acd_residuals(series, ["key"], spec, 0.2, [0.2], [0.3]),
+        "acd_psi": recursion_ops.acd_psi(series, ["key"], 0.2, [0.2], [0.3]),
+        "ewma": recursion_ops.ewma(series, ["key"], 0.3),
+        "acd_forecast": recursion_ops.acd_forecast(series, ["key"], 0.2, [0.2], [0.3], 8),
+        "holt_linear": recursion_ops.holt_linear(series, ["key"]),
+        "ewma_continue": pipe.ewma_continue(t1h),
+    }
+    for op, df in per_key_plans.items():
+        plan = explain_str(df)
+        checks.append((f"per-key {op}: one FlatMapGroupsInPandas, <= 2 Exchanges",
+                       len(re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)) == 1
+                       and len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) <= 2, plan))
+    shutil.rmtree(wm_dir, ignore_errors=True)
 
-    # 41. heavy hitters recount: candidate filter + two-phase count +
+    # 41. heavy hitters recount: candidate semi-join + two-phase count +
     # TakeOrderedAndProject (the candidate scan itself is a shuffle-free
-    # mapInPandas, asserted by construction — this checks the recount)
+    # mapInPandas, asserted by construction — this checks the recount;
+    # AQE chooses the join strategy, the set is bounded only by k·parts)
     from rust_timeseries_spark.operators import heavyhitters as hh_ops
 
     words = docs_ep.selectExpr("explode(split(text, ' ')) as w")
     plan = explain_str(hh_ops.heavy_hitters_exact(words, "w", top_n=5, k_counters=64))
-    checks.append(("heavy hitters: broadcast SEMI-join recount (no driver isin literal) + two-phase count + top-n",
+    checks.append(("heavy hitters: SEMI-join recount (no driver isin literal) + two-phase count + top-n",
                    plan.count("HashAggregate") >= 2
                    and "TakeOrderedAndProject" in plan
                    and "LeftSemi" in plan
